@@ -24,7 +24,6 @@ import pytest
 from video_data_pipeline_spark.calibrate import (
     CapBoundError,
     calibrate_simhash,
-    calibrated_simhash_near_pairs,
     measure_front,
 )
 from video_data_pipeline_spark.queries.dedup import (
@@ -52,6 +51,16 @@ def low_entropy_docs(spark):
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _calibrated_rows(docs, **kw):
+    # the pre-flight's plan, then the pair join it prescribes
+    plan = calibrate_simhash(docs, **kw)
+    return _rows(
+        simhash_near_pairs_capped(
+            docs, max_bucket_size=plan.max_bucket_size, geometry=plan.geometry
+        )
+    )
 
 
 def test_no_bind_keeps_registered_default(spark, low_entropy_docs):
@@ -87,11 +96,7 @@ def test_calibrated_output_is_oracle_exact_when_cap_would_bind(
     capped = _rows(simhash_near_pairs_capped(low_entropy_docs, max_bucket_size=8))
     exact = _rows(simhash_near_pairs_capped(low_entropy_docs, max_bucket_size=None))
     assert len(capped) < len(exact), "fixture must actually bind the cap"
-    calibrated = _rows(
-        calibrated_simhash_near_pairs(
-            low_entropy_docs, default_cap=8, pair_budget=10**6
-        )
-    )
+    calibrated = _calibrated_rows(low_entropy_docs, default_cap=8, pair_budget=10**6)
     assert calibrated == exact
 
 
@@ -151,11 +156,7 @@ def test_explicit_uncapped_request_skips_preflight(spark, low_entropy_docs):
     assert plan.max_bucket_size is None
     assert plan.stats == {}  # nothing was measured
     exact = _rows(simhash_near_pairs_capped(low_entropy_docs, max_bucket_size=None))
-    got = _rows(
-        calibrated_simhash_near_pairs(
-            low_entropy_docs, default_cap=None, pair_budget=1
-        )
-    )
+    got = _calibrated_rows(low_entropy_docs, default_cap=None, pair_budget=1)
     assert got == exact
 
 

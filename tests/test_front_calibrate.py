@@ -1,13 +1,12 @@
-"""Generic cap pre-flight for the single-front pair generators (r14,
-VERDICT r13 #5): minhash-LSH bands, prefix-filter buckets, containment
-postings.
+"""Cap pre-flight for the single-front pair generators: minhash-LSH
+bands, prefix-filter buckets, containment postings.
 
-The simhash family got calibrate= in r13; these fronts have one geometry
-each, so their ladder is calibrate_capped_front: measure (one linear
-groupBy, no pair expansion) → proceed default (cap proven not to bind,
-exact) / proceed uncapped (measured workload fits the budget, exact) /
-refuse by name. A crafted near-clone corpus (rotations: distinct content,
-near-identical shingle sets, hence identical signatures) drives the bind.
+Each of these families has one front, so the pre-flight's ladder is:
+measure (one linear groupBy, no pair expansion) → proceed default (cap
+proven not to bind, exact) / proceed uncapped (measured workload fits the
+budget, exact) / refuse by name. A crafted near-clone corpus (rotations:
+distinct content, near-identical shingle sets, hence identical
+signatures) drives the bind.
 """
 
 from __future__ import annotations
@@ -16,8 +15,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from video_data_pipeline_spark.calibrate import (
+    Budget,
     CapBoundError,
-    calibrate_capped_front,
+    preflight,
 )
 from video_data_pipeline_spark.queries.dedup import (
     lsh_pairs_from_bands,
@@ -51,12 +51,22 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _front_plan(keys, cap, name, budget=None, default_cap=None,
+                escape_arg="max_bucket_size"):
+    """The pre-flight over one uncached front; ``default_cap`` defaults to
+    ``cap`` (the ladder), a different value makes ``cap`` explicit."""
+    return preflight(
+        {name: lambda: keys}, cap, cap if default_cap is None else default_cap,
+        budget or Budget.pairs(), escape_arg=escape_arg,
+    )
+
+
 # ---------------------------------------------------------- unit ladder
 
 
 def test_front_plan_default_when_cap_has_headroom(spark):
     keys = spark.createDataFrame([("a",)] * 3 + [("b",)] * 2, "key string")
-    plan = calibrate_capped_front(keys, 64, "toy")
+    plan = _front_plan(keys, 64, "toy")
     assert plan.decision == "default"
     assert plan.max_bucket_size == 64
     assert not plan.stats["toy"].binds
@@ -64,7 +74,7 @@ def test_front_plan_default_when_cap_has_headroom(spark):
 
 def test_front_plan_uncapped_within_budget(spark):
     keys = spark.createDataFrame([("hot",)] * 10 + [("b",)] * 2, "key string")
-    plan = calibrate_capped_front(keys, 4, "toy", pair_budget=1000)
+    plan = _front_plan(keys, 4, "toy", Budget.pairs(1000))
     assert plan.decision == "exact_uncapped"
     assert plan.max_bucket_size is None
     assert plan.stats["toy"].binds
@@ -74,8 +84,8 @@ def test_front_plan_uncapped_within_budget(spark):
 def test_front_plan_refuses_over_budget_naming_escapes(spark):
     keys = spark.createDataFrame([("hot",)] * 10, "key string")
     with pytest.raises(CapBoundError) as ei:
-        calibrate_capped_front(
-            keys, 4, "containment_postings", pair_budget=10,
+        _front_plan(
+            keys, 4, "containment_postings", Budget.pairs(10),
             escape_arg="max_posting_size",
         )
     msg = str(ei.value)
@@ -97,11 +107,11 @@ def test_minhash_calibrated_exact_when_cap_would_bind(spark, near_clone_docs):
     # the pre-flight on the same front must pick the uncapped exact plan
     from pyspark.sql import functions as F
 
-    plan = calibrate_capped_front(
+    plan = _front_plan(
         bands.select(F.concat_ws("/", "band_idx", "band_key").alias("key")),
         8,
         "minhash_bands",
-        pair_budget=10**6,
+        Budget.pairs(10**6),
     )
     assert plan.decision == "exact_uncapped"
     assert _rows(lsh_pairs_from_bands(bands, plan.max_bucket_size)) == exact
@@ -112,33 +122,29 @@ def test_minhash_refusal_on_clone_corpus_tiny_budget(spark, near_clone_docs):
 
     bands = minhash_bands(exact_dup_representatives(near_clone_docs))
     with pytest.raises(CapBoundError) as ei:
-        calibrate_capped_front(
+        _front_plan(
             bands.select(F.concat_ws("/", "band_idx", "band_key").alias("key")),
             8,
             "minhash_bands",
-            pair_budget=10,
+            Budget.pairs(10),
         )
     assert "minhash_bands" in str(ei.value)
 
 
-# ------------------------------------- bytes-weighted workload model (r15,
-# VERDICT r14 #4): staged verification made verified-family per-candidate
-# shuffle bytes a constant, so the proceed test budgets candidates x bytes
-# — the count proxy refused affordable short-set corpora
+# ------------------------------------------ bytes-weighted workload model:
+# staged verification made verified-family per-candidate shuffle bytes a
+# constant, so the proceed test budgets candidates x bytes — a count
+# budget refuses affordable short-set corpora
 
 
 def test_byte_budget_proceeds_where_count_budget_refused(spark):
-    from video_data_pipeline_spark.calibrate import STAGED_CANDIDATE_BYTES
-
     # one hot bucket of 12,650 members: ~80M in-bucket candidate pairs —
-    # over the old 50M verified count budget, but 80M x 160 B = 12.8 GiB,
-    # comfortably inside the 128 GiB byte budget
+    # over a 50M count budget, but 80M x 160 B = 12.8 GiB, comfortably
+    # inside the 128 GiB byte budget
     keys = spark.range(12_650).select(F.lit("hot").alias("key"))
     with pytest.raises(CapBoundError):
-        calibrate_capped_front(keys, 64, "prefix_buckets", pair_budget=50_000_000)
-    plan = calibrate_capped_front(
-        keys, 64, "prefix_buckets", bytes_per_candidate=STAGED_CANDIDATE_BYTES
-    )
+        _front_plan(keys, 64, "prefix_buckets", Budget.pairs(50_000_000))
+    plan = _front_plan(keys, 64, "prefix_buckets", Budget.verified(spark))
     assert plan.decision == "exact_uncapped"
     assert plan.max_bucket_size is None
     assert "GiB" in plan.reason
@@ -147,9 +153,8 @@ def test_byte_budget_proceeds_where_count_budget_refused(spark):
 def test_byte_budget_refuses_over_byte_bound_naming_gib(spark):
     keys = spark.range(12_650).select(F.lit("hot").alias("key"))
     with pytest.raises(CapBoundError) as ei:
-        calibrate_capped_front(
-            keys, 64, "containment_postings",
-            bytes_per_candidate=160, byte_budget=1 << 30,
+        _front_plan(
+            keys, 64, "containment_postings", Budget(1 << 30, 160),
             escape_arg="max_posting_size",
         )
     msg = str(ei.value)
@@ -158,17 +163,17 @@ def test_byte_budget_refuses_over_byte_bound_naming_gib(spark):
 
 
 def test_cluster_scaled_byte_budget(spark):
-    # r15 (ROADMAP r16 #3 pulled forward): the 128 GiB byte bound is a
-    # single-node constant; declaring N executors scales the refusal
-    # boundary with the cluster (the staged filter's shuffle spreads
-    # uniformly over executors)
+    # the 128 GiB byte bound is a single-node constant; declaring N
+    # executors scales the refusal boundary with the cluster (the staged
+    # filter's shuffle spreads uniformly over executors)
     from video_data_pipeline_spark.calibrate import (
         DEFAULT_CANDIDATE_BYTE_BUDGET,
-        cluster_byte_budget,
+        resolve_byte_budget,
     )
 
-    # local mode: no executor count declared -> the measured single-node bound
-    assert cluster_byte_budget(spark) == DEFAULT_CANDIDATE_BYTE_BUDGET
+    # local mode: no executor count declared -> the single-node bound
+    one = resolve_byte_budget(spark)
+    assert one.n_executors == 1 and one.total == one.per_node
 
     # executor.instances is a STARTUP conf (Spark refuses runtime set),
     # so the conf-read path is pinned via a stub session
@@ -179,44 +184,39 @@ def test_cluster_scaled_byte_budget(spark):
     class _FakeSpark:
         conf = _FakeConf()
 
-    assert cluster_byte_budget(_FakeSpark()) == 4 * DEFAULT_CANDIDATE_BYTE_BUDGET
+    four = resolve_byte_budget(_FakeSpark())
+    assert four.n_executors == 4 and four.total == 4 * four.per_node
 
     # and the ladder consults the scaled bound: a 60k-member hot bucket
     # (1.8B candidates x 160 B = 268 GiB) refuses on one node, proceeds
     # inside a 4-node budget (512 GiB)
     keys = spark.range(60_000).select(F.lit("hot").alias("key"))
     with pytest.raises(CapBoundError):
-        calibrate_capped_front(
-            keys, 64, "prefix_buckets", bytes_per_candidate=160
-        )
-    plan = calibrate_capped_front(
-        keys, 64, "prefix_buckets", bytes_per_candidate=160,
-        byte_budget=4 * DEFAULT_CANDIDATE_BYTE_BUDGET,
-    )
+        _front_plan(keys, 64, "prefix_buckets",
+                    Budget(DEFAULT_CANDIDATE_BYTE_BUDGET, 160))
+    plan = _front_plan(keys, 64, "prefix_buckets",
+                       Budget(4 * DEFAULT_CANDIDATE_BYTE_BUDGET, 160))
     assert plan.decision == "exact_uncapped"
 
 
 def test_registered_verified_families_use_byte_model_by_default(spark, monkeypatch):
-    # the registered calibrate branch must run the bytes-weighted decision
-    # (front_plan_from_stats with bytes_per_candidate) when no explicit
-    # pair_budget is given, and the count-budget ladder when one is
+    # the registered calibrate branch must decide under the bytes-weighted
+    # budget when no explicit pair_budget is given, and under the count
+    # budget when one is
     from video_data_pipeline_spark import calibrate
-    from video_data_pipeline_spark.calibrate import clear_plan_cache
+    from video_data_pipeline_spark.calibrate import (
+        STAGED_CANDIDATE_BYTES,
+        clear_plan_cache,
+    )
 
-    byte_calls, count_calls = [], []
-    real_fps = calibrate.front_plan_from_stats
-    real_ccf = calibrate.calibrate_capped_front
+    budgets = []
+    real = calibrate.decide
 
-    def spy_fps(s, **kw):
-        byte_calls.append(kw)
-        return real_fps(s, **kw)
+    def spy(fronts, stats, cap, default_cap, budget, *a, **kw):
+        budgets.append(budget)
+        return real(fronts, stats, cap, default_cap, budget, *a, **kw)
 
-    def spy_ccf(keys, cap, name, **kw):
-        count_calls.append(kw)
-        return real_ccf(keys, cap, name, **kw)
-
-    monkeypatch.setattr(calibrate, "front_plan_from_stats", spy_fps)
-    monkeypatch.setattr(calibrate, "calibrate_capped_front", spy_ccf)
+    monkeypatch.setattr(calibrate, "decide", spy)
     clear_plan_cache()
     try:
         q_prefix_filter_join(spark, SF_DIR, calibrate=True).count()
@@ -224,15 +224,10 @@ def test_registered_verified_families_use_byte_model_by_default(spark, monkeypat
         q_prefix_filter_join(
             spark, SF_DIR, calibrate=True, pair_budget=10**9
         ).count()
-        # calibrate_capped_front itself delegates to front_plan_from_stats,
-        # so restrict to the byte-model invocations
-        byted = [kw for kw in byte_calls if kw.get("bytes_per_candidate")]
-        assert len(byted) == 2
-        # the resolved budget's provenance rides the decision (VERDICT r15 #4)
-        assert all("byte budget" in kw.get("budget_note", "") for kw in byted)
-        assert len(count_calls) == 1
-        assert count_calls[0].get("pair_budget") == 10**9
-        assert "bytes_per_candidate" not in count_calls[0]
+        assert [b.cost for b in budgets] == [STAGED_CANDIDATE_BYTES] * 2 + [1]
+        # the resolved budget's provenance rides the decision
+        assert all("byte budget" in b.note for b in budgets[:2])
+        assert budgets[2].limit == 10**9
     finally:
         clear_plan_cache()
 
@@ -240,11 +235,10 @@ def test_registered_verified_families_use_byte_model_by_default(spark, monkeypat
 def test_byte_decision_rederives_against_current_budget(
     spark, monkeypatch, tmp_path
 ):
-    # ADVICE r15 medium, the exact scenario: a measurement cached by an
-    # N-executor process (large budget -> proceed) must NOT replay as a
-    # verbatim proceed in a single-node process whose own budget refuses —
-    # the byte paths cache only the budget-invariant measurement and
-    # re-derive the decision per process
+    # a measurement cached by an N-executor process (large budget ->
+    # proceed) must NOT replay as a verbatim proceed in a single-node
+    # process whose own budget refuses — the cache holds only the
+    # budget-invariant measurement and the decision re-derives per process
     from video_data_pipeline_spark import calibrate
     from video_data_pipeline_spark.calibrate import (
         CapBoundError,
@@ -345,7 +339,6 @@ def test_small_disk_refuses_where_constant_would_proceed(spark, monkeypatch):
     # would accept refuses on a mocked small disk, naming the measured
     # free space in the refusal
     from video_data_pipeline_spark import calibrate
-    from video_data_pipeline_spark.calibrate import STAGED_CANDIDATE_BYTES
 
     keys = spark.range(12_650).select(F.lit("hot").alias("key"))  # ~12.8 GiB
     monkeypatch.setattr(
@@ -353,10 +346,7 @@ def test_small_disk_refuses_where_constant_would_proceed(spark, monkeypatch):
         lambda s=None: (1 << 30, "/small"),  # 1 GiB free -> 8 GiB budget
     )
     with pytest.raises(CapBoundError) as ei:
-        calibrate.calibrate_capped_front(
-            keys, 64, "prefix_buckets",
-            bytes_per_candidate=STAGED_CANDIDATE_BYTES,
-        )
+        _front_plan(keys, 64, "prefix_buckets", Budget.verified(spark))
     msg = str(ei.value)
     assert "free 1.0 GiB" in msg and "BINDS below the probe-anchored" in msg
     # and with a healthy disk the same workload proceeds (the r15 behavior)
@@ -364,10 +354,7 @@ def test_small_disk_refuses_where_constant_would_proceed(spark, monkeypatch):
         calibrate, "measured_local_headroom_bytes",
         lambda s=None: (1 << 40, "/tmp"),
     )
-    plan = calibrate.calibrate_capped_front(
-        keys, 64, "prefix_buckets",
-        bytes_per_candidate=STAGED_CANDIDATE_BYTES,
-    )
+    plan = _front_plan(keys, 64, "prefix_buckets", Budget.verified(spark))
     assert plan.decision == "exact_uncapped"
     assert "not binding" in plan.reason
 
@@ -414,11 +401,9 @@ def test_explicit_uncapped_skips_preflight_all_families(spark):
 # proceed, never refuse the caller back into the escape they already took
 
 
-def test_explicit_cap_plan_measures_and_never_refuses(spark):
-    from video_data_pipeline_spark.calibrate import explicit_cap_plan
-
+def test_explicit_cap_measures_and_never_refuses(spark):
     keys = spark.createDataFrame([("hot",)] * 10 + [("b",)] * 2, "key string")
-    plan = explicit_cap_plan(keys, 4, "toy")
+    plan = _front_plan(keys, 4, "toy", Budget.pairs(1), default_cap=64)
     assert plan.decision == "explicit_capped"
     assert plan.max_bucket_size == 4
     s = plan.stats["toy"]
@@ -458,15 +443,11 @@ def test_explicit_cap_terminates_on_binding_corpus(spark, near_clone_docs):
     # the full loop the ADVICE described: refusal names the escape, the
     # caller follows it, the second run must SUCCEED (capped) — before
     # r15 it re-refused (and the decision cache made the loop infinite)
-    from pyspark.sql import functions as F
-
-    from video_data_pipeline_spark.calibrate import explicit_cap_plan
-
     bands = minhash_bands(exact_dup_representatives(near_clone_docs))
     front = bands.select(F.concat_ws("/", "band_idx", "band_key").alias("key"))
     with pytest.raises(CapBoundError):
-        calibrate_capped_front(front, 8, "minhash_bands", pair_budget=10)
-    plan = explicit_cap_plan(front, 8, "minhash_bands")
+        _front_plan(front, 8, "minhash_bands", Budget.pairs(10))
+    plan = _front_plan(front, 8, "minhash_bands", Budget.pairs(10), default_cap=64)
     assert plan.decision == "explicit_capped"
     capped = _rows(lsh_pairs_from_bands(bands, plan.max_bucket_size))
     assert capped == _rows(lsh_pairs_from_bands(bands, max_bucket_size=8))

@@ -7,11 +7,11 @@ safe on corpora whose joins would not be — and reports whether each
 default cap binds, i.e. whether the registered queries would return
 capped subsets rather than oracle-exact answers.
 
-Since r13 the measurement core lives in
-``video_data_pipeline_spark.calibrate`` (NULL-safe aggregates, integer
-pair arithmetic), which also powers the ``calibrate=True`` knob on the
-registered simhash queries — the engine runs this pre-flight itself and
-proceeds-exact or refuses by name. Use the CLI for the full five-front
+The measurement core lives in ``video_data_pipeline_spark.calibrate``
+(NULL-safe aggregates, integer pair arithmetic), which also powers the
+``calibrate=True`` knob on the registered pair queries of all four
+families — the engine runs this pre-flight itself and proceeds-exact or
+refuses by name. Use the CLI for the full five-front
 matrix and for ahead-of-time corpus audits.
 
 Reading the report:

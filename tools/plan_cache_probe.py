@@ -1,12 +1,13 @@
-"""Cross-process decision-cache probe (r15, VERDICT r14 #2).
+"""Cross-process measurement-cache probe.
 
-The r14 cache was process-local: a nightly job re-measured every launch.
-r15 adds a JSON sidecar (``$SPARK_GRAFT_PLAN_CACHE``); this probe proves
-the cross-process contract on a real corpus: for each calibrated twin it
+With ``$SPARK_GRAFT_PLAN_CACHE`` set, the cap pre-flight persists its
+front measurements to a JSON sidecar. This probe proves the
+cross-process contract on a real corpus: for each calibrated twin it
 spawns TWO child processes sharing one sidecar — run 1 (cold) must
-measure its front at least once and persist the decision; run 2 (a brand
-new process) must serve the decision from the sidecar with ZERO
-measurement shuffles and return the identical row count.
+measure its front at least once and persist the measurement; run 2 (a
+brand new process) must re-derive its decision from the sidecar's
+measurements with ZERO measurement shuffles and return the identical
+row count.
 
     python tools/plan_cache_probe.py --sf-dir /tmp/sfp1 --json PROBE.json
 
@@ -27,11 +28,10 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: the first two cache DECISIONS (count-budget model, budget in the key);
-#: the last two cache the budget-invariant MEASUREMENT and re-derive the
-#: decision per process (r16, ADVICE r15 medium) — run 2 must still show
-#: zero measure_front calls (the FrontStats came from the sidecar) with
-#: identical rows
+#: one calibrated twin per pair family. Measurements memoize by corpus
+#: fingerprint; decisions re-derive against the current budget — so run 2
+#: must show zero measure_front calls (the FrontStats came from the
+#: sidecar) with identical rows
 QUERIES = [
     "q_simhash_near_pairs_calibrated",
     "q_minhash_lsh_pairs_calibrated",
@@ -114,11 +114,12 @@ def main() -> int:
     result = {
         "sf_dir": args.sf_dir,
         "note": (
-            "cross-process decision-cache probe (r15, VERDICT r14 #2): two "
-            "SEPARATE processes per query share one $SPARK_GRAFT_PLAN_CACHE "
-            "sidecar on an unchanged corpus; run 2 is a brand new process "
-            "and must serve the pre-flight decision from the sidecar with "
-            "zero measure_front calls and identical rows. Timing deltas "
+            "cross-process measurement-cache probe: two SEPARATE "
+            "processes per query share one $SPARK_GRAFT_PLAN_CACHE sidecar "
+            "on an unchanged corpus; run 2 is a brand new process and must "
+            "re-derive the pre-flight decision from the sidecar's "
+            "measurements with zero measure_front calls and identical "
+            "rows. Timing deltas "
             "include full JVM startup in both legs, so n_measurements is "
             "the signal; secs is context."
         ),

@@ -1,48 +1,48 @@
-"""Hot-bucket cap calibration: measure a corpus BEFORE the pair joins run.
+"""Hot-bucket cap pre-flight: measure a corpus BEFORE the pair joins run.
 
-Every pair generator ships its 100 TB hot-bucket guard ON by default
-(r12): minhash-LSH bands, prefix-filter buckets, containment postings,
-and the simhash pigeonhole front each cap their candidate buckets. The
-caps are calibrated never to bind on non-degenerate corpora — but on a
-boilerplate-heavy crawl they CAN bind, and a bound cap means the
-registered query returns a capped SUBSET, not the oracle answer
-(measured: the simhash default emits 3.28M of 6.64M oracle pairs on the
-10x-perturbed sfp1 corpus, CORRECTNESS_sfp1_r12.json).
+Every pair generator (minhash-LSH bands, prefix-filter buckets,
+containment postings, simhash pigeonhole chunks) caps its candidate
+buckets by default. The caps never bind on non-degenerate corpora, but on
+a boilerplate-heavy crawl they can, and then the registered query returns
+a capped SUBSET, not the oracle answer (the simhash default emits 3.28M
+of 6.64M oracle pairs on the 10x-perturbed sfp1 corpus,
+CORRECTNESS_sfp1_r12.json). ``calibrate=True`` runs :func:`preflight`
+first:
 
-This module is the job-surface fix (VERDICT r12 #1): a pre-flight that
-measures the actual bucket-size distribution of each front — ONE linear
-groupBy per front, no pair expansion, so it is safe on corpora whose
-joins would not be — and then *decides*:
+1. **measure** — :func:`measure_front` is ONE linear groupBy per front
+   (no pair expansion, so it is safe where the joins would not be). A
+   family's fronts are measured in order, a later one only when the
+   first binds.
+2. **decide** — :func:`decide` is pure arithmetic over the measurements
+   and the current :class:`Budget`; it returns one :class:`Plan` or
+   raises :class:`CapBoundError`: ``cap=None`` → ``explicit_uncapped``
+   (nothing measured); an explicit non-default cap → ``explicit_capped``
+   (accepted partial recall, measured and reported, never refused); the
+   first front does not bind → ``default``; it binds → ``exact_uncapped``
+   on the cheapest measured front whose uncapped workload fits the budget
+   (every front of a family is complete, so the output stays exact), or
+   a refusal by name instead of a silent capped subset.
 
-- the default cap does not bind → proceed with the registered default
-  (exact, bounded; the measurement cost was one cheap agg);
-- the cap binds but some complete pigeonhole geometry's EXACT (uncapped)
-  candidate workload fits ``pair_budget`` → proceed uncapped on the
-  cheapest such geometry (on low-entropy corpora that is typically the
-  Manku-style 20x30-bit combo keys: measured 58M vs 148M candidates at
-  sfp1 — both geometries are complete for hamming <= 3, so the output is
-  oracle-exact either way);
-- every exact plan exceeds the budget → raise :class:`CapBoundError`
-  naming the boundary and the measured workload, instead of silently
-  emitting a 49%-recall subset. The caller can re-run with an explicit
-  ``max_bucket_size`` (accepting documented partial recall) or
-  ``max_bucket_size=None`` (accepting the quadratic workload).
-
-The same measurement core backs ``tools/cap_calibrate.py`` (the manual
-pre-flight CLI) and the ``calibrate=True`` knob on the registered
-simhash queries.
-
-At 100 TB the measurement is one shuffle over the corpus per front —
-~the cost of a distinct-count — and the decision it buys is the
-difference between a silent recall hole and a named, budgeted plan.
+Measurements memoize by corpus fingerprint; decisions re-derive against
+the current budget. Only the budget-invariant :class:`FrontStats` is
+cached, keyed by (front name, :func:`corpus_fingerprint`, cap), so a
+repeated refusal costs zero Spark jobs and a decision made under one
+budget (executor count, disk headroom) is never replayed under another.
+``$SPARK_GRAFT_PLAN_CACHE`` persists the measurements to a JSON sidecar,
+so a new process on an unchanged corpus measures nothing.
+:func:`standard_fronts` feeds the ``calibrate`` CLI command and
+``tools/cap_calibrate.py`` the same measurements.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import json
 import logging
 import os
-from dataclasses import dataclass, field
+import tempfile
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,6 +50,8 @@ from pyspark.sql import functions as F
 from video_data_pipeline_spark.checkpoint import checkpoint_frame
 
 log = logging.getLogger("video_data_pipeline_spark.calibrate")
+
+_GIB = 1 << 30
 
 #: Default candidate-pair budget for an auto-selected EXACT plan. Sized
 #: from measured runs: 148M uncapped simhash candidates at sfp1 verified
@@ -59,52 +61,25 @@ log = logging.getLogger("video_data_pipeline_spark.calibrate")
 #: regimes (sfp30 chunks: ~4.6B candidates) that exhaust spill disk.
 DEFAULT_PAIR_BUDGET = 200_000_000
 
-#: Default budget for the VERIFIED-join families (prefix-filter,
-#: containment): their candidates are not scalar pairs — each one carries
-#: two ~100-element BIGINT shingle arrays into an exact array_intersect
-#: verification, so per-candidate cost (bytes shuffled + CPU) runs ~two
-#: orders heavier than a simhash/minhash candidate. Measured at sfp10
-#: (PROBE_PREFIX_CAL_SFP10_r14.json): the capped default's 35.5M
-#: candidates verify in 78 s with ZERO spill, while a 200M-budget
-#: "proceed" on the same corpus (151.2M exact candidates) spilled 36 GB
-#: disk + 59 GB memory over 316 s for +2.2% more rows — the exact
-#: pathology the pre-flight exists to refuse. 50M keeps proceeds in the
-#: measured zero-spill regime; callers who want the spill anyway pass
-#: ``pair_budget`` explicitly (the refusal names the escape).
-#:
-#: r15 NOTE: the registered verified-family queries no longer use this
-#: count proxy by default — staged verification made their per-candidate
-#: shuffle bytes a constant, so their default proceed test is the
-#: bytes-weighted model below (VERDICT r14 #4). The constant remains the
-#: documented reference point for explicit count budgets.
-DEFAULT_VERIFIED_PAIR_BUDGET = 50_000_000
-
-#: r15 (VERDICT r14 #4+#5): the verified families now verify in STAGES —
-#: candidates attach a fixed-size packed-histogram summary (8 BIGINTs +
-#: n + sat per side) and a safe intersection upper bound prunes them
-#: before the full arrays join (``simjoin.py::summary_table``). That
-#: makes the per-candidate bytes through the heavy shuffle a measured
-#: CONSTANT (~160 B: two 72 B summaries + ids), independent of set
-#: length — so the workload model budgets candidates x bytes instead of
-#: the r14 count proxy (which refused affordable short-set corpora and
-#: accepted expensive long-set ones). Anchored to two live runs on
+#: The verified families (prefix-filter, containment) verify in STAGES:
+#: candidates attach a fixed-size packed-histogram summary and a safe
+#: intersection upper bound prunes them before the full arrays join
+#: (``simjoin.py::summary_table``). Per-candidate bytes through the heavy
+#: shuffle are therefore a measured CONSTANT (~160 B: two 72 B summaries
+#: + ids), independent of set length, so their default budget counts
+#: candidates x bytes — a pair count mis-ranks corpora by set length.
+#: The 128 GiB per-node bound is anchored to two live runs on
 #: local[32]/128 GiB: PROBE_PREFIX_STAGED_SFP10_r15 — 151.2M candidates
-#: (22.5 GiB logical) through the staged filter, 1.38 GB disk spill,
-#: 220 s; PROBE_CONTAINMENT_STAGED_SFP10_r15 — 601M candidates
-#: (89.5 GiB logical), 2.5 GB disk spill, 200 s (the packed summaries
-#: compress ~30x in the shuffle, so logical bytes overstate the I/O).
-#: 128 GiB sits just above the heavier measured run and well below the
-#: r14 pathology's regime; sfp30's fronts (193 GiB prefix / 768 GiB
-#: containment) still refuse. An initial 32 GiB guess would have
-#: re-created the count proxy's failure mode — refusing the measured
-#: 200 s / 2.5 GB-spill containment run.
+#: (22.5 GiB logical), 1.38 GB disk spill, 220 s;
+#: PROBE_CONTAINMENT_STAGED_SFP10_r15 — 601M candidates (89.5 GiB
+#: logical), 2.5 GB disk spill, 200 s. sfp30's fronts (193 GiB prefix /
+#: 768 GiB containment) still refuse.
 STAGED_CANDIDATE_BYTES = 160
 DEFAULT_CANDIDATE_BYTE_BUDGET = 128 << 30
 
-#: r16 (VERDICT r15 #4): maps LOGICAL candidate bytes to worst-case node
-#: disk spill for the headroom floor below. Both staged sfp10 probes
-#: spilled well under 1/16 of their logical workload (1.38 GB of
-#: 22.5 GiB = 6.1%; 2.5 GB of 89.5 GiB = 2.8% — the packed summaries
+#: Maps LOGICAL candidate bytes to worst-case node disk spill for the
+#: headroom floor below. Both staged sfp10 probes spilled well under 1/16
+#: of their logical workload (6.1% and 2.8% — the packed summaries
 #: compress ~30x in the shuffle), so assuming a node may spill up to
 #: budget/8 of real disk bounds both measurements with 2x margin.
 SPILL_HEADROOM_FACTOR = 8
@@ -119,26 +94,6 @@ def declared_executor_count(spark) -> int:
         return 1
 
 
-def cluster_byte_budget(spark) -> int:
-    """Scale the spill-safe candidate byte budget by the cluster size
-    (r15, ROADMAP r16 #3 pulled forward):
-    :data:`DEFAULT_CANDIDATE_BYTE_BUDGET` (128 GiB) is a SINGLE-NODE
-    bound (anchored to two measured staged runs on local[32]/128 GiB —
-    PROBE_PREFIX_STAGED_SFP10_r15 / PROBE_CONTAINMENT_STAGED_SFP10_r15),
-    but the staged filter's shuffle spreads uniformly over executors
-    (candidates key on uniform ids), so an N-executor cluster tolerates
-    ~N x the bytes before any one node spills past its disk. Reads
-    ``spark.executor.instances`` via :func:`declared_executor_count`
-    (absent degrades to 1, the measured single-node bound; a
-    dynamic-allocation operator should pass ``byte_budget`` explicitly).
-
-    This is the probe-anchored CONSTANT cap; the runtime default the
-    pre-flights actually use is :func:`resolve_byte_budget`, which also
-    floors the per-node bound by measured local-disk headroom
-    (r16, VERDICT r15 #4)."""
-    return DEFAULT_CANDIDATE_BYTE_BUDGET * declared_executor_count(spark)
-
-
 def measured_local_headroom_bytes(spark=None) -> tuple[int, str] | None:
     """``statvfs`` free bytes of the shuffle spill directory — the first
     entry of ``spark.local.dir`` (falling back to ``$SPARK_LOCAL_DIRS``,
@@ -147,8 +102,6 @@ def measured_local_headroom_bytes(spark=None) -> tuple[int, str] | None:
     local mode, honest-best-effort on a heterogeneous cluster (the
     refusal/decision text names the measured number and the knob).
     Returns ``(free_bytes, path)`` or None when nothing can be statted."""
-    import tempfile
-
     local = None
     if spark is not None:
         try:
@@ -167,14 +120,14 @@ def measured_local_headroom_bytes(spark=None) -> tuple[int, str] | None:
 
 @dataclass
 class ResolvedByteBudget:
-    """Runtime byte budget for the staged verified-family pre-flights
-    (r16, VERDICT r15 #4): per node, the LOWER of the probe-anchored
-    constant (:data:`DEFAULT_CANDIDATE_BYTE_BUDGET`) and measured
-    local-disk headroom (free bytes x :data:`SPILL_HEADROOM_FACTOR` —
-    the probe machine's ~disk profile is no longer assumed), scaled by
-    the declared executor count. ``provenance`` is the human-readable
-    arithmetic, carried into every decision/refusal message so the
-    artifact names the measured free space alongside the workload."""
+    """Runtime byte budget for the verified families: per node, the LOWER
+    of the probe-anchored constant (:data:`DEFAULT_CANDIDATE_BYTE_BUDGET`)
+    and measured local-disk headroom (free bytes x
+    :data:`SPILL_HEADROOM_FACTOR`), scaled by the declared executor count
+    (the staged filter's shuffle keys on uniform ids, so it spreads over
+    executors). ``provenance`` is the human-readable arithmetic, carried
+    into every decision/refusal message so the artifact names the
+    measured free space alongside the workload."""
 
     total: int
     per_node: int
@@ -186,11 +139,10 @@ class ResolvedByteBudget:
 def resolve_byte_budget(spark) -> ResolvedByteBudget:
     n = declared_executor_count(spark)
     measured = measured_local_headroom_bytes(spark)
-    gib = 1 << 30
     if measured is None:
         per_node = DEFAULT_CANDIDATE_BYTE_BUDGET
         prov = (
-            f"byte budget {per_node / gib:.0f} GiB/node (probe-anchored "
+            f"byte budget {per_node / _GIB:.0f} GiB/node (probe-anchored "
             f"constant; local-disk headroom unmeasurable) x {n} executor(s)"
         )
         return ResolvedByteBudget(per_node * n, per_node, n, None, prov)
@@ -199,26 +151,66 @@ def resolve_byte_budget(spark) -> ResolvedByteBudget:
     per_node = min(DEFAULT_CANDIDATE_BYTE_BUDGET, floor)
     if floor < DEFAULT_CANDIDATE_BYTE_BUDGET:
         prov = (
-            f"byte budget {per_node / gib:.1f} GiB/node — measured spill-dir "
+            f"byte budget {per_node / _GIB:.1f} GiB/node — measured spill-dir "
             f"headroom BINDS below the probe-anchored constant: {path!r} free "
-            f"{free / gib:.1f} GiB x {SPILL_HEADROOM_FACTOR} (measured "
-            f"spill-to-logical margin) = {floor / gib:.1f} GiB < "
-            f"{DEFAULT_CANDIDATE_BYTE_BUDGET / gib:.0f} GiB; x {n} executor(s)"
+            f"{free / _GIB:.1f} GiB x {SPILL_HEADROOM_FACTOR} (measured "
+            f"spill-to-logical margin) = {floor / _GIB:.1f} GiB < "
+            f"{DEFAULT_CANDIDATE_BYTE_BUDGET / _GIB:.0f} GiB; x {n} executor(s)"
         )
     else:
         prov = (
-            f"byte budget {per_node / gib:.0f} GiB/node (probe-anchored "
-            f"constant; measured spill-dir {path!r} free {free / gib:.1f} GiB "
+            f"byte budget {per_node / _GIB:.0f} GiB/node (probe-anchored "
+            f"constant; measured spill-dir {path!r} free {free / _GIB:.1f} GiB "
             f"x {SPILL_HEADROOM_FACTOR} headroom floor not binding) x "
             f"{n} executor(s)"
         )
     return ResolvedByteBudget(per_node * n, per_node, n, free, prov)
 
+
+@dataclass(frozen=True)
+class Budget:
+    """The proceed test of an exact plan: ``candidates x cost <= limit``.
+    The count model is ``cost=1`` against a pair count; the byte model
+    prices each candidate at :data:`STAGED_CANDIDATE_BYTES` against the
+    resolved byte budget, whose provenance rides along as ``note``."""
+
+    limit: int
+    cost: int = 1
+    note: str = ""
+
+    @classmethod
+    def pairs(cls, pair_budget: int | None = None) -> Budget:
+        return cls(DEFAULT_PAIR_BUDGET if pair_budget is None else pair_budget)
+
+    @classmethod
+    def verified(cls, spark, pair_budget: int | None = None) -> Budget:
+        """The verified families' budget: an explicit ``pair_budget``
+        keeps the count model, otherwise the byte model."""
+        if pair_budget is not None:
+            return cls.pairs(pair_budget)
+        rb = resolve_byte_budget(spark)
+        return cls(rb.total, STAGED_CANDIDATE_BYTES, rb.provenance)
+
+    def fits(self, s: FrontStats) -> bool:
+        return s.uncapped_pairs * self.cost <= self.limit
+
+    def workload(self, s: FrontStats) -> str:
+        if self.cost == 1:
+            return f"{s.uncapped_pairs:,} exact candidate pairs"
+        return (
+            f"{s.uncapped_pairs:,} candidates x {self.cost} B = "
+            f"{s.uncapped_pairs * self.cost / _GIB:.1f} GiB"
+        )
+
+    def __str__(self) -> str:
+        if self.cost == 1:
+            return f"pair_budget={self.limit:,}"
+        return f"the candidate byte budget ({self.limit / _GIB:.0f} GiB)"
+
+
 #: sentinel distinguishing "caller did not choose a cap" (use the family
 #: default) from an EXPLICIT ``default_cap=None`` (the caller already
-#: accepted the uncapped quadratic workload — ADVICE r13: mapping None
-#: back to the default made the pre-flight refuse with advice to "pass
-#: max_bucket_size=None", the exact thing the caller had already done)
+#: accepted the uncapped quadratic workload)
 _UNSET = object()
 
 
@@ -286,9 +278,9 @@ def measure_front(keys: DataFrame, default_cap: int, name: str = "front") -> Fro
 
 class CapBoundError(RuntimeError):
     """The default cap binds on this corpus AND no exact plan fits the
-    pair budget: refusing is the honest answer (a silent capped subset
-    reads as oracle-exact). Carries the per-geometry :class:`FrontStats`
-    so the caller/artifact can record the named boundary."""
+    budget: refusing is the honest answer (a silent capped subset reads
+    as oracle-exact). Carries the per-front :class:`FrontStats` so the
+    caller/artifact can record the named boundary."""
 
     def __init__(self, message: str, stats: dict[str, FrontStats]):
         super().__init__(message)
@@ -296,33 +288,124 @@ class CapBoundError(RuntimeError):
 
 
 @dataclass
-class SimhashPlan:
-    """Outcome of :func:`calibrate_simhash`: which pigeonhole geometry to
-    run and with what cap, plus the measurements that justify it.
-    ``decision`` is ``"default"`` (cap proven not to bind — registered
-    behavior, exact) or ``"exact_uncapped"`` (cap binds; run the cheapest
-    complete geometry uncapped within budget — exact). A corpus where
-    neither is possible raises :class:`CapBoundError` instead."""
+class Plan:
+    """Outcome of :func:`decide`: run front ``geometry`` with cap
+    ``max_bucket_size`` (None = uncapped). ``decision`` is one of
+    ``explicit_uncapped``, ``explicit_capped``, ``default`` or
+    ``exact_uncapped``; ``stats`` holds the measurements behind it."""
 
     decision: str
     geometry: str
     max_bucket_size: int | None
     reason: str
     stats: dict[str, FrontStats]
-    signatures: DataFrame | None = field(default=None, repr=False)
-
-    def as_dict(self) -> dict:
-        return {
-            "decision": self.decision,
-            "geometry": self.geometry,
-            "max_bucket_size": self.max_bucket_size,
-            "reason": self.reason,
-            "fronts": {k: v.as_dict() for k, v in self.stats.items()},
-        }
 
 
-def _key(df: DataFrame) -> DataFrame:
-    return df.select(F.concat_ws("/", "c", "chunk").alias("key"))
+def decide(
+    fronts: tuple[str, ...],
+    stats: dict[str, FrontStats],
+    cap: int | None,
+    default_cap: int,
+    budget: Budget,
+    family: str | None = None,
+    escape_arg: str = "max_bucket_size",
+) -> Plan:
+    """The pre-flight's decision — pure local arithmetic, no Spark job.
+    ``fronts`` are the family's front names in measurement order (the
+    first is its default geometry); ``stats`` holds what was measured of
+    them at ``cap``: nothing when ``cap`` is None, the first front
+    otherwise, and every front once the first binds. ``escape_arg`` names
+    the family's cap knob in the texts."""
+    family = family or fronts[0]
+    first = fronts[0]
+    if cap is None:
+        reason = (
+            f"caller passed {escape_arg}=None explicitly — the uncapped "
+            "exact join was already chosen, pre-flight skipped"
+        )
+        log.info("%s calibration: %s", family, reason)
+        return Plan("explicit_uncapped", first, None, reason, {})
+    s = stats[first]
+    if cap != default_cap:
+        if s.binds:
+            pct = 100.0 * s.capped_pairs / max(s.uncapped_pairs, 1)
+            reason = (
+                f"explicit cap {cap} BINDS (max bucket {s.max_bucket}, "
+                f"{s.oversized} oversized buckets): proceeding with the "
+                f"caller's accepted partial recall — in-bucket candidate "
+                f"workload {s.capped_pairs:,} of {s.uncapped_pairs:,} "
+                f"({pct:.1f}%)"
+            )
+        else:
+            reason = (
+                f"explicit cap {cap} does not bind (measured max bucket "
+                f"{s.max_bucket}) — output is exact here"
+            )
+        log.log(logging.WARNING if s.binds else logging.INFO,
+                "%s calibration (explicit cap): %s", family, reason)
+        return Plan("explicit_capped", first, cap, reason, stats)
+    if not s.binds:
+        reason = (
+            f"default cap {cap} does not bind (measured max bucket "
+            f"{s.max_bucket}) — registered default is exact here"
+        )
+        log.info("%s calibration: %s", family, reason)
+        return Plan("default", first, cap, reason, stats)
+    note = f" [{budget.note}]" if budget.note else ""
+    affordable = [t for t in stats.values() if budget.fits(t)]
+    if affordable:
+        best = min(affordable, key=lambda t: t.uncapped_pairs)
+        reason = (
+            f"default cap {cap} BINDS on this corpus (max bucket "
+            f"{s.max_bucket}, {s.oversized} oversized buckets) — running "
+            f"geometry={best.name!r} UNCAPPED instead: its exact workload "
+            f"{budget.workload(best)} fits {budget}; output stays "
+            f"oracle-exact{note}"
+        )
+        log.warning("%s calibration: %s", family, reason)
+        return Plan("exact_uncapped", best.name, None, reason, stats)
+    measured = "; ".join(
+        f"{t.name} front max bucket {t.max_bucket} ({t.oversized} oversized, "
+        f"{budget.workload(t)})"
+        for t in stats.values()
+    )
+    override = " (a count budget overrides the byte model)" if budget.cost > 1 else ""
+    raise CapBoundError(
+        f"{family} default cap {cap} BINDS on this corpus and no exact plan "
+        f"fits {budget}: {measured}{note}. Refusing rather than silently "
+        f"emitting a capped subset. Escapes: raise pair_budget{override} and "
+        f"re-calibrate; pass {escape_arg}=None to accept the quadratic exact "
+        f"workload; or pass an explicit non-default {escape_arg} to accept "
+        "DOCUMENTED partial recall — under calibrate=True the pre-flight "
+        "then MEASURES the recall (emitted-vs-total candidate workload) and "
+        "proceeds with your cap instead of refusing again.",
+        stats,
+    )
+
+
+def preflight(
+    fronts: dict[str, Callable[[], DataFrame]],
+    cap: int | None,
+    default_cap: int,
+    budget: Budget,
+    fingerprint=None,
+    family: str | None = None,
+    escape_arg: str = "max_bucket_size",
+) -> Plan:
+    """Measure a family's fronts, then :func:`decide`. ``fronts`` maps each
+    front name, in measurement order, to a builder of its one-column
+    ``key`` frame; a builder runs only when its front is measured. With a
+    ``fingerprint`` (:func:`corpus_fingerprint`) each measurement is
+    memoized under (front name, fingerprint, cap); None measures every
+    time."""
+    stats: dict[str, FrontStats] = {}
+    if cap is not None:
+        for name, build in fronts.items():
+            key = None if fingerprint is None else (name, fingerprint, cap)
+            stats[name] = cached_stats(key, lambda: measure_front(build(), cap, name))
+            if cap != default_cap or not stats[name].binds:
+                break
+    return decide(tuple(fronts), stats, cap, default_cap, budget, family, escape_arg)
 
 
 def calibrate_simhash(
@@ -330,188 +413,58 @@ def calibrate_simhash(
     pair_budget: int = DEFAULT_PAIR_BUDGET,
     default_cap=_UNSET,
     max_hamming: int = 3,
-) -> SimhashPlan:
-    """Pre-flight for the simhash near-pair family (VERDICT r12 #1).
-
-    Measures the 4x15-bit chunk front first (one linear groupBy over the
-    rep-collapsed corpus); if the default cap does not bind, the
-    registered default IS exact here and the plan says so. If it binds,
-    the 20x30-bit combo front is measured too and the cheapest geometry
-    whose EXACT (uncapped) candidate workload fits ``pair_budget`` is
-    selected — both geometries are complete for hamming <= 3
-    (output-invariance pytest- and oracle-pinned), so the uncapped run is
-    oracle-exact regardless of which wins. If neither fits, raises
-    :class:`CapBoundError` naming the measured maxima and workloads.
-
-    The 60-bit signature is computed ONCE and lazily checkpointed; the
-    returned plan carries it (``signatures``) so the subsequent pair join
-    reuses the same frame instead of re-running the md5 pass.
-
-    ``default_cap`` semantics (ADVICE r13): leaving it unset means "test
-    the family default"; an EXPLICIT ``default_cap=None`` means the caller
-    already chose the uncapped exact join, so there is nothing to
-    calibrate — the plan is ``explicit_uncapped`` with no measurement (in
-    particular, no :class:`CapBoundError` can send the caller back to the
-    escape they already took). An integer ``default_cap`` keeps the full
-    LADDER semantics here — this is the library pre-flight probes and the
-    CLI use to test arbitrary caps; the REGISTERED-query layer is where
-    an explicit non-default cap means accepted partial recall (r15,
-    ADVICE r14 — see :func:`explicit_cap_plan` and the ``calibrate=True``
-    branches in ``queries/dedup.py`` / ``queries/simjoin.py``).
-    """
+) -> Plan:
+    """Library pre-flight for the simhash family over a docs frame
+    (uncached: a frame has no fingerprint); the signature is computed once
+    and lazily checkpointed for both fronts. ``default_cap`` unset tests
+    the family default; an EXPLICIT ``None`` is ``explicit_uncapped``
+    (nothing measured, no possible refusal). An integer keeps the full
+    default-cap ladder — only the registered queries treat an explicit
+    non-default cap as accepted partial recall."""
     from video_data_pipeline_spark.queries.dedup import (
         DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
-        chunk_keys,
-        combo_keys,
         exact_dup_representatives,
+        simhash_fronts,
         simhash_signatures,
     )
 
     if default_cap is _UNSET:
         default_cap = DEFAULT_SIMHASH_MAX_BUCKET_SIZE
     sig = checkpoint_frame(simhash_signatures(exact_dup_representatives(docs)))
-    if default_cap is None:
-        reason = (
-            "caller passed max_bucket_size=None explicitly — the uncapped "
-            "exact join was already chosen, pre-flight skipped"
-        )
-        log.info("simhash calibration: %s", reason)
-        return SimhashPlan(
-            decision="explicit_uncapped",
-            geometry="chunks",
-            max_bucket_size=None,
-            reason=reason,
-            stats={},
-            signatures=sig,
-        )
-    stats: dict[str, FrontStats] = {}
-    stats["chunks"] = measure_front(_key(chunk_keys(sig)), default_cap, "chunks")
-    if not stats["chunks"].binds:
-        reason = (
-            f"default cap {default_cap} does not bind (measured max bucket "
-            f"{stats['chunks'].max_bucket}) — registered default is exact here"
-        )
-        log.info("simhash calibration: %s", reason)
-        return SimhashPlan(
-            decision="default",
-            geometry="chunks",
-            max_bucket_size=default_cap,
-            reason=reason,
-            stats=stats,
-            signatures=sig,
-        )
-    if max_hamming <= 3:
-        # the 3-of-6 combo geometry is complete only for hamming <= 3;
-        # beyond that, chunks-uncapped is the only exact candidate
-        stats["combos"] = measure_front(
-            _key(combo_keys(sig)), default_cap, "combos"
-        )
-    affordable = [
-        s for s in stats.values() if s.uncapped_pairs <= pair_budget
-    ]
-    if affordable:
-        best = min(affordable, key=lambda s: s.uncapped_pairs)
-        reason = (
-            f"default cap {default_cap} BINDS on this corpus (chunk-bucket max "
-            f"{stats['chunks'].max_bucket}, {stats['chunks'].oversized} oversized "
-            f"buckets) — running geometry={best.name!r} UNCAPPED instead: its "
-            f"exact candidate workload {best.uncapped_pairs:,} pairs fits the "
-            f"budget ({pair_budget:,}); output stays oracle-exact"
-        )
-        log.warning("simhash calibration: %s", reason)
-        return SimhashPlan(
-            decision="exact_uncapped",
-            geometry=best.name,
-            max_bucket_size=None,
-            reason=reason,
-            stats=stats,
-            signatures=sig,
-        )
-    measured = "; ".join(
-        f"{s.name} front max bucket {s.max_bucket} ({s.oversized} oversized, "
-        f"{s.uncapped_pairs:,} exact candidate pairs)"
-        for s in stats.values()
-    )
-    raise CapBoundError(
-        f"simhash default cap {default_cap} BINDS on this corpus and no exact "
-        f"plan fits pair_budget={pair_budget:,}: {measured}. Refusing "
-        "rather than silently emitting a capped subset. Escapes: raise "
-        "pair_budget and re-calibrate; pass max_bucket_size=None to accept "
-        "the quadratic exact workload; or pass an explicit non-default "
-        "max_bucket_size to accept DOCUMENTED partial recall — under "
-        "calibrate=True the pre-flight then MEASURES the recall "
-        "(emitted-vs-total candidate workload) and proceeds with your cap "
-        "instead of refusing again.",
-        stats,
+    return preflight(
+        simhash_fronts(sig, max_hamming), default_cap, default_cap,
+        Budget.pairs(pair_budget), family="simhash",
     )
 
 
-def calibrated_simhash_near_pairs(
-    docs: DataFrame,
-    pair_budget: int = DEFAULT_PAIR_BUDGET,
-    default_cap=_UNSET,
-    observation=None,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """:func:`calibrate_simhash` + the pair join the plan prescribes —
-    the ``calibrate=True`` body of the registered ``q_simhash_near_pairs``.
-    Exact by construction: every path this function returns is either a
-    proven-not-to-bind default, an uncapped complete geometry, or the
-    caller's own explicit ``default_cap=None`` uncapped request; the
-    cap-binds-and-over-budget case raises :class:`CapBoundError`."""
-    from video_data_pipeline_spark.queries.dedup import simhash_near_pairs_capped
-
-    plan = calibrate_simhash(
-        docs, pair_budget=pair_budget, default_cap=default_cap, max_hamming=max_hamming
-    )
-    return simhash_near_pairs_capped(
-        docs,
-        max_bucket_size=plan.max_bucket_size,
-        observation=observation,
-        max_hamming=max_hamming,
-        geometry=plan.geometry,
-        signatures=plan.signatures,
-    )
-
-
-# ------------------------------------------------ pre-flight decision cache
+# ------------------------------------------------------ measurement cache
 #
-# r14 (VERDICT r13 #8, unlocked by #5 making pre-flights routine): a
-# pre-flight's DECISION depends only on the corpus bytes and the knobs
-# (cap, budget), so repeated calibrated runs on an unchanged corpus can
-# skip the measurement shuffle. The cache stores plain decisions — never
-# DataFrames, so entries are session-independent — keyed by a stat-based
-# corpus fingerprint (realpath + per-file mtime_ns + size): any rewrite of
-# the parquet changes the key, so staleness is structural, not timed.
-# Refusals cache too (the CapBoundError itself, re-raised), since re-
-# measuring a corpus just to refuse it again is the most wasteful repeat.
+# Only FrontStats are cached: they depend on the corpus bytes, the front
+# and the cap, never on the budget. Keys embed a stat-based corpus
+# fingerprint, so any rewrite of the parquet makes a new key — staleness
+# is structural, not timed. ``$SPARK_GRAFT_PLAN_CACHE`` also spills every
+# measurement to a JSON sidecar (flock + atomic replace, merged so
+# concurrent writers keep each other's entries), reloaded on the first
+# lookup of a new process: scheduled re-runs on an unchanged corpus are
+# where a pre-flight repeats most. Opt-in, because an always-on sidecar
+# would leak measurements between unrelated sessions.
 
 
-_PLAN_CACHE: dict[tuple, object] = {}
+_STATS_CACHE: dict[tuple, FrontStats] = {}
 _PERSISTED_LOADED = False
+
+_CACHE_FORMAT = 1
+
+#: sidecar entry cap: entries are small and self-invalidating, but one
+#: sidecar pointed at thousands of corpora must not grow unboundedly —
+#: the file keeps insertion order, so the cap drops the OLDEST entries
+_CACHE_MAX_ENTRIES = 512
 
 
 def clear_plan_cache() -> None:
     global _PERSISTED_LOADED
-    _PLAN_CACHE.clear()
+    _STATS_CACHE.clear()
     _PERSISTED_LOADED = False
-
-
-# -------------------------------------------- cross-process persistence
-#
-# r15 (VERDICT r14 #2): process-local memoization misses the usage
-# pattern where the pre-flight matters most — scheduled re-runs on an
-# unchanged (or slowly-growing) 100 TB corpus, each a NEW driver
-# process. Setting ``SPARK_GRAFT_PLAN_CACHE=/path/plan_cache.json``
-# spills every decision to a JSON sidecar (atomic tmp+rename,
-# merge-on-save so concurrent jobs don't clobber each other) and
-# reloads it lazily on the first cached_plan call of a new process.
-# Staleness stays STRUCTURAL: keys embed the stat fingerprint (realpath
-# + per-leaf-file mtime_ns + size), so any rewrite of the parquet makes
-# a new key — persisted entries for the old bytes simply never match
-# again. Opt-in by env var, deliberately: an always-on sidecar would
-# leak decisions between unrelated test sessions, and the production
-# caller (a nightly job) is exactly the one that can set one env var.
 
 
 def plan_cache_path() -> str | None:
@@ -528,122 +481,10 @@ def _key_from_json(k):
     return tuple(_key_from_json(x) for x in k) if isinstance(k, list) else k
 
 
-def _stats_to_json(stats: dict) -> dict:
-    return {name: dataclasses.asdict(s) for name, s in stats.items()}
-
-
-def _stats_from_json(d: dict) -> dict:
-    return {name: FrontStats(**payload) for name, payload in d.items()}
-
-
-def _entry_to_json(obj):
-    if isinstance(obj, FrontStats):
-        # r16 (ADVICE r15 medium): the byte-model paths cache the
-        # MEASUREMENT, not the decision — a proceed/refusal derived under
-        # one budget (executor count, disk headroom) must not be served
-        # verbatim under another; the stats are budget-invariant and the
-        # decision re-derives in microseconds
-        return {"kind": "FrontStats", "stats": dataclasses.asdict(obj)}
-    if isinstance(obj, SimhashPlan):
-        return {
-            "kind": "SimhashPlan",
-            "decision": obj.decision,
-            "geometry": obj.geometry,
-            "max_bucket_size": obj.max_bucket_size,
-            "reason": obj.reason,
-            "stats": _stats_to_json(obj.stats),
-        }
-    if isinstance(obj, FrontPlan):
-        return {
-            "kind": "FrontPlan",
-            "decision": obj.decision,
-            "max_bucket_size": obj.max_bucket_size,
-            "reason": obj.reason,
-            "stats": _stats_to_json(obj.stats),
-        }
-    if isinstance(obj, CapBoundError):
-        return {
-            "kind": "CapBoundError",
-            "message": str(obj),
-            "stats": _stats_to_json(obj.stats),
-        }
-    return None  # unknown decision type: keep it process-local
-
-
-def _entry_from_json(rec):
-    kind = rec.get("kind")
-    if kind == "FrontStats":
-        return FrontStats(**rec["stats"])
-    if kind == "SimhashPlan":
-        return SimhashPlan(
-            decision=rec["decision"],
-            geometry=rec["geometry"],
-            max_bucket_size=rec["max_bucket_size"],
-            reason=rec["reason"],
-            stats=_stats_from_json(rec["stats"]),
-            signatures=None,
-        )
-    if kind == "FrontPlan":
-        return FrontPlan(
-            decision=rec["decision"],
-            max_bucket_size=rec["max_bucket_size"],
-            reason=rec["reason"],
-            stats=_stats_from_json(rec["stats"]),
-        )
-    if kind == "CapBoundError":
-        return CapBoundError(rec["message"], _stats_from_json(rec["stats"]))
-    raise ValueError(f"unknown plan-cache entry kind {kind!r}")
-
-
-_CACHE_FORMAT = 1
-
-#: sidecar entry cap (r15, ROADMAP r16 #4 pulled forward): entries are
-#: ~1 KB and structurally self-invalidating, but a deployment pointing
-#: one sidecar at thousands of distinct corpora shouldn't grow it
-#: unboundedly — the file keeps insertion order, so the cap drops the
-#: OLDEST entries (their corpora have usually been rewritten anyway,
-#: which orphans their fingerprint keys)
-_CACHE_MAX_ENTRIES = 512
-
-
-def _max_age_secs() -> float | None:
-    """Optional age-out (r16, VERDICT r15 #7):
-    ``SPARK_GRAFT_PLAN_CACHE_MAX_AGE_DAYS`` drops sidecar entries older
-    than N days on both read and save. Unset → no age limit: staleness is
-    primarily STRUCTURAL (fingerprint keys orphan on any corpus rewrite)
-    and the entry cap bounds growth; the age knob is for deployments that
-    also want a time bound (e.g. a budget-policy change should not serve
-    months-old measurements forever on a truly frozen corpus)."""
-    raw = os.environ.get("SPARK_GRAFT_PLAN_CACHE_MAX_AGE_DAYS")
-    if not raw:
-        return None
-    try:
-        return float(raw) * 86400.0
-    except ValueError:
-        log.warning("plan cache: ignoring non-numeric "
-                    "SPARK_GRAFT_PLAN_CACHE_MAX_AGE_DAYS=%r", raw)
-        return None
-
-
-def _fresh(rec: dict) -> bool:
-    import time
-
-    max_age = _max_age_secs()
-    if max_age is None:
-        return True
-    saved = rec.get("saved_at")
-    # entries written before the saved_at field existed have no timestamp;
-    # under an age policy treat them as expired (age unknown = not provably
-    # fresh)
-    return saved is not None and (time.time() - saved) <= max_age
-
-
 def _read_sidecar_records(path: str) -> list[dict]:
-    """Raw (still-JSON) records of a sidecar file, format-checked but not
-    parsed into decision objects — the merge half of :func:`_persist`
-    works on these so fields like ``saved_at`` survive a rewrite."""
-    import json
-
+    """Raw JSON records of a sidecar file, format-checked but not parsed
+    — the merge in :func:`_persist` rewrites these, so entries of kinds
+    this version cannot parse survive for the readers that can."""
     try:
         with open(path) as f:
             doc = json.load(f)
@@ -658,23 +499,6 @@ def _read_sidecar_records(path: str) -> list[dict]:
         return []
 
 
-def _read_sidecar(path: str) -> dict[tuple, object]:
-    out = {}
-    for rec in _read_sidecar_records(path):
-        # per-entry parse (ADVICE r15): one malformed or unknown-kind
-        # record (e.g. written by a newer version) skips THAT record,
-        # not the whole file — older readers keep every decision they
-        # can still understand
-        try:
-            if not _fresh(rec):
-                continue
-            out[_key_from_json(rec["key"])] = _entry_from_json(rec["entry"])
-        except (ValueError, KeyError, TypeError) as e:
-            log.warning("plan cache: skipping unparseable entry in %s (%s)",
-                        path, e)
-    return out
-
-
 def _load_persisted_once() -> None:
     global _PERSISTED_LOADED
     if _PERSISTED_LOADED:
@@ -683,34 +507,35 @@ def _load_persisted_once() -> None:
     path = plan_cache_path()
     if path is None:
         return
-    loaded = _read_sidecar(path)
-    for k, v in loaded.items():
-        _PLAN_CACHE.setdefault(k, v)  # in-memory (fresher) entries win
-    if loaded:
-        log.info("plan cache: loaded %d persisted decision(s) from %s",
-                 len(loaded), path)
+    n = 0
+    for rec in _read_sidecar_records(path):
+        # per-entry parse: one malformed or unknown-kind record skips THAT
+        # record, not the whole file
+        try:
+            entry = rec["entry"]
+            if entry.get("kind") != "FrontStats":
+                raise ValueError(f"unknown plan-cache entry kind {entry.get('kind')!r}")
+            # in-memory (fresher) entries win
+            _STATS_CACHE.setdefault(
+                _key_from_json(rec["key"]), FrontStats(**entry["stats"])
+            )
+            n += 1
+        except (ValueError, KeyError, TypeError, AttributeError) as e:
+            log.warning("plan cache: skipping unparseable entry in %s (%s)", path, e)
+    if n:
+        log.info("plan cache: loaded %d persisted measurement(s) from %s", n, path)
 
 
-def _persist(key: tuple, entry) -> None:
+def _persist(key: tuple, stats: FrontStats) -> None:
     path = plan_cache_path()
     if path is None:
         return
-    rec = _entry_to_json(entry)
-    if rec is None:
-        return
-    import json
-    import tempfile
-    import time
-
     try:
         d = os.path.dirname(os.path.abspath(path))
         os.makedirs(d, exist_ok=True)
-        # an exclusive flock serializes the read-merge-replace (r16,
-        # VERDICT r15 #5 / ADVICE r15): without it two processes finishing
-        # measurements concurrently could both read, then the second
-        # os.replace silently dropped the first's new entry (lost update —
-        # only a future cache miss, but the "don't clobber" comment used
-        # to overstate the guarantee; now it doesn't have to)
+        # an exclusive flock serializes the read-merge-replace: without it
+        # two processes finishing measurements concurrently could both
+        # read, and the second os.replace would drop the first's entry
         with open(path + ".lock", "w") as lk:
             try:
                 import fcntl
@@ -719,18 +544,13 @@ def _persist(key: tuple, entry) -> None:
             except ImportError:  # non-POSIX: keep best-effort merge
                 pass
             key_json = _key_to_json(key)
-            merged = [
-                r for r in _read_sidecar_records(path)
-                if r.get("key") != key_json and _fresh(r)
-            ]
-            merged.append(
-                {"key": key_json, "entry": rec, "saved_at": time.time()}
-            )
-            doc = {
-                "format": _CACHE_FORMAT,
-                # newest last; the cap drops the OLDEST entries
-                "entries": merged[-_CACHE_MAX_ENTRIES:],
-            }
+            merged = [r for r in _read_sidecar_records(path) if r.get("key") != key_json]
+            merged.append({
+                "key": key_json,
+                "entry": {"kind": "FrontStats", "stats": dataclasses.asdict(stats)},
+            })
+            # newest last; the cap drops the OLDEST entries
+            doc = {"format": _CACHE_FORMAT, "entries": merged[-_CACHE_MAX_ENTRIES:]}
             fd, tmp = tempfile.mkstemp(dir=d, suffix=".plan_cache.tmp")
             with os.fdopen(fd, "w") as f:
                 json.dump(doc, f, indent=1)
@@ -741,13 +561,12 @@ def _persist(key: tuple, entry) -> None:
 
 def corpus_fingerprint(sf_dir: str, table: str = "documents"):
     """Stat-based fingerprint of one parquet table (file or directory of
-    part files). Walks the FULL tree (ADVICE r14): a partitioned layout
-    (key=val subdirs) can have a nested part file rewritten in place
-    without changing top-level names or subdir sizes — and directory
-    mtime does not change on child-CONTENT modification — so every leaf
-    file's (relpath, mtime_ns, size) enters the key. Returns None when
-    the path can't be statted — callers then bypass the cache rather
-    than guess."""
+    part files). Walks the FULL tree: a partitioned layout (key=val
+    subdirs) can have a nested part file rewritten in place without
+    changing top-level names or subdir sizes — and directory mtime does
+    not change on child-CONTENT modification — so every leaf file's
+    (relpath, mtime_ns, size) enters the key. Returns None when the path
+    can't be statted — callers then bypass the cache rather than guess."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:
         if os.path.isdir(path):
@@ -767,241 +586,20 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents"):
         return None
 
 
-def cached_plan(key, compute):
-    """Memoized pre-flight: return/compute the decision under ``key``
-    (None bypasses the cache entirely). Cached :class:`SimhashPlan`
-    entries drop their session-bound ``signatures`` frame — a hit rebuilds
-    signatures lazily inside the pair join, which is exactly the one-pass
-    plan the uncached query runs; the saving is the measurement shuffle,
-    not the signature math. Cached refusals re-raise the stored
-    :class:`CapBoundError`. With ``$SPARK_GRAFT_PLAN_CACHE`` set,
-    decisions also round-trip a JSON sidecar, so a NEW process on the
-    unchanged corpus skips the measurement too (r15, VERDICT r14 #2)."""
-    if key is not None:
-        _load_persisted_once()
-    if key is not None and key in _PLAN_CACHE:
-        hit = _PLAN_CACHE[key]
+def cached_stats(key, compute: Callable[[], FrontStats]) -> FrontStats:
+    """Memoized measurement: return/compute the :class:`FrontStats` under
+    ``key`` (None bypasses the cache). With ``$SPARK_GRAFT_PLAN_CACHE``
+    set, a new process loads earlier processes' measurements first."""
+    if key is None:
+        return compute()
+    _load_persisted_once()
+    hit = _STATS_CACHE.get(key)
+    if hit is not None:
         log.info("calibration cache hit for %s", key[0])
-        if isinstance(hit, CapBoundError):
-            raise hit
         return hit
-    try:
-        plan = compute()
-    except CapBoundError as e:
-        if key is not None:
-            _PLAN_CACHE[key] = e
-            _persist(key, e)
-        raise
-    if key is not None:
-        stored = plan
-        if isinstance(plan, SimhashPlan) and plan.signatures is not None:
-            stored = dataclasses.replace(plan, signatures=None)
-        _PLAN_CACHE[key] = stored
-        _persist(key, stored)
-    return plan
-
-
-# ---------------------------------------------- generic single-front plan
-#
-# r14 (VERDICT r13 #5): the simhash pre-flight above juggles two complete
-# pigeonhole geometries; every OTHER capped pair generator — minhash-LSH
-# bands, prefix-filter buckets, containment postings — has exactly one
-# front, so its pre-flight is the simpler ladder below. Their caps were
-# measured never to bind off clone corpora, which is why calibrate= stays
-# OFF by default there (zero added cost on the registered path); turning
-# it on buys the same contract the simhash family has: proceed on a
-# proven-exact plan or refuse by name — never a silent capped subset.
-
-
-@dataclass
-class FrontPlan:
-    """Outcome of :func:`calibrate_capped_front`. ``decision`` is
-    ``"default"`` (cap measured not to bind — registered behavior, exact)
-    or ``"exact_uncapped"`` (cap binds; the measured uncapped in-bucket
-    workload fits the budget, so run uncapped — exact). Over-budget binds
-    raise :class:`CapBoundError` instead."""
-
-    decision: str
-    max_bucket_size: int | None
-    reason: str
-    stats: dict[str, FrontStats]
-
-    def as_dict(self) -> dict:
-        return {
-            "decision": self.decision,
-            "max_bucket_size": self.max_bucket_size,
-            "reason": self.reason,
-            "fronts": {k: v.as_dict() for k, v in self.stats.items()},
-        }
-
-
-def calibrate_capped_front(
-    keys: DataFrame,
-    default_cap: int,
-    name: str,
-    pair_budget: int | None = None,
-    escape_arg: str = "max_bucket_size",
-    bytes_per_candidate: int | None = None,
-    byte_budget: int | None = None,
-) -> FrontPlan:
-    """Single-front cap pre-flight: one linear groupBy over ``keys`` (one
-    row per (doc, bucket-key) membership — no pair expansion), then decide.
-
-    ``uncapped_pairs`` is the in-bucket candidate workload sum(n*(n-1)/2)
-    — for the prefix/containment fronts an UPPER bound on real candidates
-    (their joins are length-filtered / asymmetric), so a proceed decision
-    is always safe and a refusal is conservative by at most that slack.
-    ``escape_arg`` names the family's uncapped knob in the refusal text
-    (``max_bucket_size`` / ``max_posting_size``).
-
-    Budget model (r15, VERDICT r14 #4): with ``bytes_per_candidate`` set
-    (the verified families pass :data:`STAGED_CANDIDATE_BYTES` — a
-    constant, since staged verification moved the array payloads off the
-    candidate shuffle) the proceed test is BYTES-weighted:
-    ``uncapped_pairs * bytes_per_candidate <= byte_budget`` (default
-    :data:`DEFAULT_CANDIDATE_BYTE_BUDGET`). Without it, the r12 count
-    test against ``pair_budget`` applies. The count proxy mis-ranked
-    corpora by set length — a short-set corpus with 80M cheap candidates
-    refused while a long-set one with 40M expensive candidates
-    proceeded; bytes are the thing the node actually spills."""
-    budget_note = ""
-    if byte_budget is None and bytes_per_candidate is not None:
-        # runtime-resolved: executor-count-scaled AND floored by measured
-        # spill-dir headroom (r16, VERDICT r15 #4) — the provenance string
-        # rides every decision/refusal so the artifact names the measured
-        # free space alongside the workload arithmetic
-        rb = resolve_byte_budget(keys.sparkSession)
-        byte_budget, budget_note = rb.total, rb.provenance
-    return front_plan_from_stats(
-        measure_front(keys, default_cap, name),
-        pair_budget=pair_budget,
-        escape_arg=escape_arg,
-        bytes_per_candidate=bytes_per_candidate,
-        byte_budget=byte_budget,
-        budget_note=budget_note,
-    )
-
-
-def front_plan_from_stats(
-    s: FrontStats,
-    pair_budget: int | None = None,
-    escape_arg: str = "max_bucket_size",
-    bytes_per_candidate: int | None = None,
-    byte_budget: int | None = None,
-    budget_note: str = "",
-) -> FrontPlan:
-    """The DECISION half of :func:`calibrate_capped_front`, factored out
-    (r16, ADVICE r15 medium) so the registered byte-model paths can cache
-    the budget-invariant MEASUREMENT (``s``) and re-derive the decision
-    against the CURRENT budget — a proceed computed under an N-executor
-    budget must never be served verbatim to a single-node process on the
-    same corpus (or vice versa for refusals). Pure local arithmetic: no
-    Spark job, so re-deriving on every cache hit costs nothing.
-    ``budget_note`` (the resolved-budget provenance) is appended to the
-    decision/refusal text."""
-    if pair_budget is None:
-        pair_budget = DEFAULT_PAIR_BUDGET
-    name, default_cap = s.name, s.default_cap
-    note = f" [{budget_note}]" if budget_note else ""
-    stats = {name: s}
-    if not s.binds:
-        reason = (
-            f"default cap {default_cap} does not bind (measured max bucket "
-            f"{s.max_bucket}) — registered default is exact here"
-        )
-        log.info("%s calibration: %s", name, reason)
-        return FrontPlan("default", default_cap, reason, stats)
-    if bytes_per_candidate is not None:
-        if byte_budget is None:
-            byte_budget = DEFAULT_CANDIDATE_BYTE_BUDGET
-        workload = s.uncapped_pairs * bytes_per_candidate
-        if workload <= byte_budget:
-            reason = (
-                f"default cap {default_cap} BINDS on this corpus (max bucket "
-                f"{s.max_bucket}, {s.oversized} oversized buckets) — running "
-                f"UNCAPPED instead: the exact workload {s.uncapped_pairs:,} "
-                f"candidates x {bytes_per_candidate} B = "
-                f"{workload / (1 << 30):.1f} GiB fits the byte budget "
-                f"({byte_budget / (1 << 30):.0f} GiB); output stays "
-                f"oracle-exact{note}"
-            )
-            log.warning("%s calibration: %s", name, reason)
-            return FrontPlan("exact_uncapped", None, reason, stats)
-        raise CapBoundError(
-            f"{name} default cap {default_cap} BINDS on this corpus and the "
-            f"exact plan does not fit the candidate byte budget: "
-            f"{s.uncapped_pairs:,} candidates x {bytes_per_candidate} B = "
-            f"{workload / (1 << 30):.1f} GiB > {byte_budget / (1 << 30):.0f} "
-            f"GiB (max bucket {s.max_bucket}, {s.oversized} oversized)"
-            f"{note}. "
-            "Refusing rather than silently emitting a capped subset. "
-            "Escapes: raise pair_budget (a count budget overrides the byte "
-            f"model) and re-calibrate; pass {escape_arg}=None to accept the "
-            f"quadratic exact workload; or pass an explicit non-default "
-            f"{escape_arg} to accept DOCUMENTED partial recall — under "
-            "calibrate=True the pre-flight then MEASURES the recall "
-            "(emitted-vs-total candidate workload) and proceeds with your "
-            "cap instead of refusing again.",
-            stats,
-        )
-    if s.uncapped_pairs <= pair_budget:
-        reason = (
-            f"default cap {default_cap} BINDS on this corpus (max bucket "
-            f"{s.max_bucket}, {s.oversized} oversized buckets) — running "
-            f"UNCAPPED instead: the exact in-bucket workload "
-            f"{s.uncapped_pairs:,} pairs fits the budget ({pair_budget:,}); "
-            "output stays oracle-exact"
-        )
-        log.warning("%s calibration: %s", name, reason)
-        return FrontPlan("exact_uncapped", None, reason, stats)
-    raise CapBoundError(
-        f"{name} default cap {default_cap} BINDS on this corpus and the "
-        f"exact plan does not fit pair_budget={pair_budget:,}: max bucket "
-        f"{s.max_bucket} ({s.oversized} oversized, {s.uncapped_pairs:,} "
-        "exact candidate pairs). Refusing rather than silently emitting a "
-        "capped subset. Escapes: raise pair_budget and re-calibrate; pass "
-        f"{escape_arg}=None to accept the quadratic exact workload; or "
-        f"pass an explicit non-default {escape_arg} to accept DOCUMENTED "
-        "partial recall — under calibrate=True the pre-flight then "
-        "MEASURES the recall (emitted-vs-total candidate workload) and "
-        "proceeds with your cap instead of refusing again.",
-        stats,
-    )
-
-
-def explicit_cap_plan(
-    keys: DataFrame, cap: int, name: str
-) -> FrontPlan:
-    """Pre-flight for a caller-EXPLICIT cap under ``calibrate=True``
-    (r15, ADVICE r14 medium): an explicit non-default cap is an accepted
-    partial-recall choice — the escape the refusal itself names — so this
-    path NEVER raises :class:`CapBoundError` (the old behavior re-refused
-    the caller's own escape, and with the decision cache the refusal
-    re-raised instantly: an infinite loop by instruction-following).
-    Instead it measures the front at the caller's cap and reports the
-    recall arithmetic: the capped in-bucket candidate workload vs the
-    uncapped total (an upper bound on emitted candidates for the
-    length-filtered families), so "accepted partial recall" comes with
-    the measured number, not a shrug (VERDICT r14 #8)."""
-    s = measure_front(keys, cap, name)
-    stats = {name: s}
-    if not s.binds:
-        reason = (
-            f"explicit cap {cap} does not bind (measured max bucket "
-            f"{s.max_bucket}) — output is exact here"
-        )
-        log.info("%s calibration (explicit cap): %s", name, reason)
-    else:
-        pct = 100.0 * s.capped_pairs / max(s.uncapped_pairs, 1)
-        reason = (
-            f"explicit cap {cap} BINDS (max bucket {s.max_bucket}, "
-            f"{s.oversized} oversized buckets): proceeding with the "
-            f"caller's accepted partial recall — in-bucket candidate "
-            f"workload {s.capped_pairs:,} of {s.uncapped_pairs:,} "
-            f"({pct:.1f}%)"
-        )
-        log.warning("%s calibration (explicit cap): %s", name, reason)
-    return FrontPlan("explicit_capped", cap, reason, stats)
+    s = _STATS_CACHE[key] = compute()
+    _persist(key, s)
+    return s
 
 
 # ------------------------------------------------------------- CLI fronts
@@ -1017,8 +615,8 @@ def standard_fronts(spark, sf_dir: str):
         DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
         exact_dup_representatives,
         minhash_bands,
-        simhash_chunks,
-        simhash_combo_keys,
+        simhash_fronts,
+        simhash_signatures,
     )
     from video_data_pipeline_spark.queries.registry import table
     from video_data_pipeline_spark.queries.simjoin import (
@@ -1031,10 +629,11 @@ def standard_fronts(spark, sf_dir: str):
     docs = table(spark, sf_dir, "documents")
     reps = exact_dup_representatives(docs)
     sets = hashed_shingle_sets(docs)
+    simhash = simhash_fronts(simhash_signatures(reps))
 
     def prefix_tokens():
         # the SAME rarity-ordered prefix rows prefix_filter_pairs joins
-        # (shared builder since r14 — measurement can't drift from the join)
+        # (shared builder — measurement can't drift from the join)
         return rarity_prefix_rows(sets).select(F.col("h").alias("key"))
 
     return [
@@ -1044,8 +643,6 @@ def standard_fronts(spark, sf_dir: str):
         ("prefix_buckets", DEFAULT_MAX_BUCKET_SIZE, prefix_tokens),
         ("containment_postings", DEFAULT_MAX_POSTING_SIZE,
          lambda: sets.select(F.explode("hs").alias("key"))),
-        ("simhash_chunks", DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
-         lambda: _key(simhash_chunks(reps))),
-        ("simhash_combos", DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
-         lambda: _key(simhash_combo_keys(reps))),
+        ("simhash_chunks", DEFAULT_SIMHASH_MAX_BUCKET_SIZE, simhash["chunks"]),
+        ("simhash_combos", DEFAULT_SIMHASH_MAX_BUCKET_SIZE, simhash["combos"]),
     ]

@@ -364,48 +364,31 @@ def q_minhash_lsh_pairs(
     survivors, triangles, pagerank, LPA — inherits the guard through this
     entry). ``max_bucket_size=None`` is the exactness escape.
 
-    ``calibrate=True`` (r14, VERDICT r13 #5) runs the generic cap
-    pre-flight first — ONE linear groupBy over the band front, no pair
-    expansion — and proceeds with the default (measured not to bind →
-    exact), runs uncapped where the measured in-bucket workload fits
-    ``pair_budget`` (exact), or raises
-    :class:`~video_data_pipeline_spark.calibrate.CapBoundError` naming
-    the boundary. An explicit ``max_bucket_size=None`` skips the
-    pre-flight: the caller already chose the uncapped exact join (the
-    simhash family's ADVICE-r13 contract)."""
+    ``calibrate=True`` runs the cap pre-flight
+    (:func:`~video_data_pipeline_spark.calibrate.preflight`) first — ONE
+    linear groupBy over the band front, no pair expansion — and proceeds
+    with the default (measured not to bind → exact), runs uncapped where
+    the measured in-bucket workload fits ``pair_budget`` (exact), or
+    raises :class:`~video_data_pipeline_spark.calibrate.CapBoundError`
+    naming the boundary. An explicit ``max_bucket_size=None`` measures
+    nothing: the caller already chose the uncapped exact join."""
     reps = exact_dup_representatives(table(spark, sf_dir, "documents"))
-    if calibrate and max_bucket_size is not None:
+    if calibrate:
         from video_data_pipeline_spark.calibrate import (
-            DEFAULT_PAIR_BUDGET,
-            cached_plan,
-            calibrate_capped_front,
+            Budget,
             corpus_fingerprint,
-            explicit_cap_plan,
+            preflight,
         )
 
-        budget = DEFAULT_PAIR_BUDGET if pair_budget is None else pair_budget
         # lazy checkpoint: the banding front runs ONCE across the
-        # measurement agg and the pair join (the calibrate_simhash
-        # signature-reuse pattern); on a decision-cache hit the
-        # checkpoint is just a no-op wrapper around the single join pass
+        # measurement agg and the pair join
         bands = checkpoint_frame(minhash_bands(reps))
-        front = bands.select(
-            F.concat_ws("/", "band_idx", "band_key").alias("key")
+        plan = preflight(
+            {"minhash_bands": lambda: bands.select(
+                F.concat_ws("/", "band_idx", "band_key").alias("key"))},
+            max_bucket_size, DEFAULT_LSH_MAX_BUCKET_SIZE,
+            Budget.pairs(pair_budget), corpus_fingerprint(sf_dir),
         )
-        fp = corpus_fingerprint(sf_dir)
-        key = None if fp is None else ("minhash_bands", fp, max_bucket_size, budget)
-        if max_bucket_size != DEFAULT_LSH_MAX_BUCKET_SIZE:
-            # explicit non-default cap = accepted partial recall (r15,
-            # ADVICE r14): measure + report, never refuse the caller's
-            # own escape (see calibrate.explicit_cap_plan)
-            compute = lambda: explicit_cap_plan(  # noqa: E731
-                front, max_bucket_size, "minhash_bands"
-            )
-        else:
-            compute = lambda: calibrate_capped_front(  # noqa: E731
-                front, max_bucket_size, "minhash_bands", pair_budget=budget
-            )
-        plan = cached_plan(key, compute)
         return lsh_pairs_from_bands(
             bands, max_bucket_size=plan.max_bucket_size, observation=observation
         )
@@ -604,6 +587,21 @@ def simhash_combo_keys(docs):
     return combo_keys(simhash_signatures(docs))
 
 
+def simhash_fronts(sig, max_hamming: int = 3):
+    """The simhash cap pre-flight's fronts over a signature frame, in
+    measurement order: name → builder of the one-column ``key`` frame.
+    The combos front is complete only for ``max_hamming <= 3``, so beyond
+    that chunks is the only front."""
+
+    def keys(front):
+        return lambda: front(sig).select(F.concat_ws("/", "c", "chunk").alias("key"))
+
+    fronts = {"chunks": keys(chunk_keys)}
+    if max_hamming <= 3:
+        fronts["combos"] = keys(combo_keys)
+    return fronts
+
+
 #: the exact (uncapped) near-pair semantics — shared by the default,
 #: combo-geometry, and calibrated registered queries: all three are
 #: complete for hamming <= 3, so one oracle pins them all
@@ -655,72 +653,40 @@ def q_simhash_near_pairs(
     front, so its pigeonhole expansion is bounded too. Pass
     ``max_bucket_size=None`` for exactness studies.
 
-    ``calibrate=True`` (r13, VERDICT r12 #1) runs the cap pre-flight
-    FIRST — one linear groupBy per pigeonhole front, no pair expansion —
-    and then either proceeds with the default (measured not to bind →
-    exact), switches to the cheapest EXACT plan whose measured candidate
-    workload fits ``pair_budget`` (auto-selecting ``geometry="combos"``
-    where the measurement says it wins), or raises
+    ``calibrate=True`` runs the cap pre-flight
+    (:func:`~video_data_pipeline_spark.calibrate.preflight`) FIRST — one
+    linear groupBy per pigeonhole front, no pair expansion — and then
+    either proceeds with the default (measured not to bind → exact),
+    switches to the cheapest EXACT plan whose measured candidate workload
+    fits ``pair_budget`` (auto-selecting ``geometry="combos"`` where the
+    measurement says it wins), or raises
     :class:`~video_data_pipeline_spark.calibrate.CapBoundError` naming
     the boundary and the workload estimate — a capped-subset answer is
     never silently produced on a corpus where the default binds. The
-    decision is memoized by corpus fingerprint + knobs (r14), so repeat
-    runs on an unchanged table skip the measurement shuffle."""
+    measurements are memoized by corpus fingerprint and the decision
+    re-derives against the current budget, so repeat runs on an
+    unchanged table skip the measurement shuffle."""
     docs = table(spark, sf_dir, "documents")
     if calibrate:
         from video_data_pipeline_spark.calibrate import (
-            DEFAULT_PAIR_BUDGET,
-            cached_plan,
-            calibrate_simhash,
+            Budget,
             corpus_fingerprint,
-            explicit_cap_plan,
+            preflight,
         )
 
-        budget = DEFAULT_PAIR_BUDGET if pair_budget is None else pair_budget
-        # decision cache (r14): keyed by the corpus fingerprint + knobs,
-        # so a repeat run on the unchanged table skips the measurement
-        # shuffle (and a cached refusal re-raises without re-measuring)
-        fp = corpus_fingerprint(sf_dir)
-        key = None if fp is None else ("simhash", fp, max_bucket_size, budget)
-        if (
-            max_bucket_size is not None
-            and max_bucket_size != DEFAULT_SIMHASH_MAX_BUCKET_SIZE
-        ):
-            # explicit non-default cap = accepted partial recall (r15,
-            # ADVICE r14): measure + report on the chunks front (the
-            # capped default's geometry), then proceed with the caller's
-            # cap — never refuse the escape they already took
-            sig = checkpoint_frame(
-                simhash_signatures(exact_dup_representatives(docs))
-            )
-            cached_plan(
-                key,
-                lambda: explicit_cap_plan(
-                    chunk_keys(sig).select(
-                        F.concat_ws("/", "c", "chunk").alias("key")
-                    ),
-                    max_bucket_size,
-                    "simhash_chunks",
-                ),
-            )
-            return simhash_near_pairs_capped(
-                docs,
-                max_bucket_size=max_bucket_size,
-                observation=observation,
-                signatures=sig,
-            )
-        plan = cached_plan(
-            key,
-            lambda: calibrate_simhash(
-                docs, pair_budget=budget, default_cap=max_bucket_size
-            ),
+        # the signature is computed ONCE and lazily checkpointed: both
+        # fronts' measurements and the pair join read the same frame
+        sig = checkpoint_frame(simhash_signatures(exact_dup_representatives(docs)))
+        plan = preflight(
+            simhash_fronts(sig), max_bucket_size, DEFAULT_SIMHASH_MAX_BUCKET_SIZE,
+            Budget.pairs(pair_budget), corpus_fingerprint(sf_dir), family="simhash",
         )
         return simhash_near_pairs_capped(
             docs,
             max_bucket_size=plan.max_bucket_size,
             observation=observation,
             geometry=plan.geometry,
-            signatures=plan.signatures,
+            signatures=sig,
         )
     return simhash_near_pairs_capped(
         docs,
@@ -1619,8 +1585,8 @@ def q_pagerank(spark, sf_dir):
     nodes defeat exchange canonicalization), and AQE's runtime stage
     reuse only recovered part of it; a 6-round same-session ABBA of the
     two forms measured the checkpointed graph at 0.67× (2.75 s → 1.84 s
-    median, identical rows asserted in-process,
-    tools/exp_pagerank_ckpt.py)."""
+    median, identical rows asserted in-process; OPTIMIZATION_r16.md
+    "pagerank")."""
     pairs = q_minhash_lsh_pairs(spark, sf_dir)
     fwd = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     rev = pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))

@@ -328,7 +328,6 @@ def rarity_prefix_rows(sets):
 
 def prefix_filter_pairs(
     docs, max_bucket_size=None, observation=None, sets=None, staged_verify=None,
-    prefix=None,
 ):
     """Core of :func:`q_prefix_filter_join`, parameterized with the family's
     100 TB hot-bucket guard (the ``lsh_pairs_from_bands`` /
@@ -369,21 +368,11 @@ def prefix_filter_pairs(
     # df via tokens, both verification sides) and Catalyst does not CSE
     # across DataFrame references — measured, re-execution of the
     # reps+shingles subtree dominated the uncheckpointed plan. A caller
-    # that already built the set table (the r14 pre-flight) passes it via
+    # that already built the set table (the cap pre-flight) passes it via
     # ``sets`` so measurement and join share one checkpoint.
     if sets is None:
         sets = hashed_shingle_sets(docs)
-    # ``prefix`` short-circuits the rarity-prefix derivation. NOT used by
-    # the registered queries (r17, VERDICT r16 #6 revisit — REJECTED):
-    # sharing a checkpointed prefix frame between the calibrated
-    # pre-flight and this join measured 0.82x at sf0.1 but ~2x the task
-    # time at the sfp10 cap-binding scale (deterministic across two
-    # same-epoch interleaved pairs, PROBE_PREFIX_SHARE_SFP10_r17.json) —
-    # the same family of failure as the r16 grouped-bucket sharing
-    # revert. Kept as a parameter so tools/exp_prefix_cal_share.py can
-    # reproduce the rejected composition.
-    if prefix is None:
-        prefix = rarity_prefix_rows(sets)
+    prefix = rarity_prefix_rows(sets)
     # bucketed pair generation WITH the PPJoin length filter evaluated
     # inside the bucket lambda: J >= τ forces τ·max(n) <= min(n), so most
     # cross-size pairs never materialize (measured: 299k -> far fewer
@@ -497,70 +486,27 @@ def q_prefix_filter_join(
     (tests/test_registered_cap_headroom.py pins that the default cap does
     NOT bind on the standard fixtures).
 
-    ``calibrate=True`` (r14, VERDICT r13 #5) measures the prefix-bucket
-    front first — one linear groupBy, no pair expansion — then proceeds
-    exact (default or uncapped-within-``pair_budget``) or raises
-    ``CapBoundError`` by name. An explicit ``max_bucket_size=None`` skips
-    the pre-flight (uncapped was already chosen)."""
+    ``calibrate=True`` measures the prefix-bucket front first — one
+    linear groupBy, no pair expansion — then proceeds exact (default, or
+    uncapped within the budget: ``pair_budget`` candidates when given,
+    else the staged-verify byte budget) or raises ``CapBoundError`` by
+    name. An explicit ``max_bucket_size=None`` measures nothing (uncapped
+    was already chosen)."""
     docs = table(spark, sf_dir, "documents")
-    if calibrate and max_bucket_size is not None:
+    if calibrate:
         from video_data_pipeline_spark.calibrate import (
-            STAGED_CANDIDATE_BYTES,
-            cached_plan,
-            calibrate_capped_front,
+            Budget,
             corpus_fingerprint,
-            explicit_cap_plan,
-            front_plan_from_stats,
-            measure_front,
-            resolve_byte_budget,
+            preflight,
         )
 
         sets = hashed_shingle_sets(docs)  # lazily checkpointed, shared
-        front = rarity_prefix_rows(sets).select(F.col("h").alias("key"))
-        fp = corpus_fingerprint(sf_dir)
-        if max_bucket_size != DEFAULT_MAX_BUCKET_SIZE:
-            # explicit non-default cap = accepted partial recall (r15,
-            # ADVICE r14): measure + report, never refuse the caller's
-            # own escape (see calibrate.explicit_cap_plan)
-            key = (
-                None if fp is None
-                else ("prefix_buckets", fp, max_bucket_size, pair_budget)
-            )
-            plan = cached_plan(key, lambda: explicit_cap_plan(
-                front, max_bucket_size, "prefix_buckets"
-            ))
-        elif pair_budget is None:
-            # bytes-weighted workload model (r15, VERDICT r14 #4): staged
-            # verification made per-candidate shuffle bytes a CONSTANT
-            # (STAGED_CANDIDATE_BYTES — summaries, not arrays), so the
-            # default proceed test budgets candidates x bytes. The cache
-            # holds the budget-INVARIANT measurement only (r16, ADVICE r15
-            # medium): the byte budget resolves at runtime (executor
-            # count, measured disk headroom), so a proceed/refusal from an
-            # N-executor process must not be replayed verbatim into a
-            # single-node one — the decision re-derives here, locally,
-            # against THIS process's budget on every hit
-            key = None if fp is None else ("prefix_front", fp, max_bucket_size)
-            stats = cached_plan(key, lambda: measure_front(
-                front, max_bucket_size, "prefix_buckets"
-            ))
-            bb = resolve_byte_budget(spark)
-            plan = front_plan_from_stats(
-                stats,
-                bytes_per_candidate=STAGED_CANDIDATE_BYTES,
-                byte_budget=bb.total,
-                budget_note=bb.provenance,
-            )
-        else:
-            # explicit pair_budget keeps the count semantics (CLI/probes);
-            # the budget is in the key, so the cached decision is sound
-            key = (
-                None if fp is None
-                else ("prefix_buckets", fp, max_bucket_size, pair_budget)
-            )
-            plan = cached_plan(key, lambda: calibrate_capped_front(
-                front, max_bucket_size, "prefix_buckets", pair_budget=pair_budget
-            ))
+        plan = preflight(
+            {"prefix_buckets": lambda: rarity_prefix_rows(sets).select(
+                F.col("h").alias("key"))},
+            max_bucket_size, DEFAULT_MAX_BUCKET_SIZE,
+            Budget.verified(spark, pair_budget), corpus_fingerprint(sf_dir),
+        )
         return prefix_filter_pairs(
             docs, max_bucket_size=plan.max_bucket_size,
             observation=observation, sets=sets,
@@ -726,72 +672,30 @@ def q_containment_pairs(
     spill-disk OOM, PROBE_CAPPED_SFP30_r10.json). ``max_posting_size=None``
     reproduces the uncapped form bit-for-bit.
 
-    ``calibrate=True`` (r14, VERDICT r13 #5) measures the posting front
-    first — one linear groupBy over the exploded hash sets — then
-    proceeds exact (default or uncapped-within-``pair_budget``; the
-    measured in-posting workload upper-bounds the asymmetric join's real
-    candidates, so proceeding is always safe) or raises ``CapBoundError``
-    naming the boundary. An explicit ``max_posting_size=None`` skips the
-    pre-flight (uncapped was already chosen)."""
+    ``calibrate=True`` measures the posting front first — one linear
+    groupBy over the exploded hash sets — then proceeds exact (default,
+    or uncapped within the budget: ``pair_budget`` candidates when given,
+    else the staged-verify byte budget; the measured in-posting workload
+    upper-bounds the asymmetric join's real candidates, so proceeding is
+    always safe) or raises ``CapBoundError`` naming the boundary. An
+    explicit ``max_posting_size=None`` measures nothing (uncapped was
+    already chosen)."""
     docs = table(spark, sf_dir, "documents")
-    if calibrate and max_posting_size is not None:
+    if calibrate:
         from video_data_pipeline_spark.calibrate import (
-            STAGED_CANDIDATE_BYTES,
-            cached_plan,
-            calibrate_capped_front,
+            Budget,
             corpus_fingerprint,
-            explicit_cap_plan,
-            front_plan_from_stats,
-            measure_front,
-            resolve_byte_budget,
+            preflight,
         )
 
         sets = hashed_shingle_sets(docs)  # lazily checkpointed, shared
-        front = sets.select(F.explode("hs").alias("key"))
-        fp = corpus_fingerprint(sf_dir)
-        if max_posting_size != DEFAULT_MAX_POSTING_SIZE:
-            # explicit non-default cap = accepted partial recall (r15,
-            # ADVICE r14): measure + report, never refuse the caller's
-            # own escape (see calibrate.explicit_cap_plan)
-            key = (
-                None if fp is None
-                else ("containment_postings", fp, max_posting_size, pair_budget)
-            )
-            plan = cached_plan(key, lambda: explicit_cap_plan(
-                front, max_posting_size, "containment_postings"
-            ))
-        elif pair_budget is None:
-            # bytes-weighted model (r15) — see q_prefix_filter_join for
-            # why the cache holds the budget-invariant MEASUREMENT and the
-            # decision re-derives against this process's resolved budget
-            # (r16, ADVICE r15 medium)
-            key = (
-                None if fp is None
-                else ("containment_front", fp, max_posting_size)
-            )
-            stats = cached_plan(key, lambda: measure_front(
-                front, max_posting_size, "containment_postings"
-            ))
-            bb = resolve_byte_budget(spark)
-            plan = front_plan_from_stats(
-                stats,
-                bytes_per_candidate=STAGED_CANDIDATE_BYTES,
-                byte_budget=bb.total,
-                budget_note=bb.provenance,
-                escape_arg="max_posting_size",
-            )
-        else:
-            key = (
-                None if fp is None
-                else ("containment_postings", fp, max_posting_size, pair_budget)
-            )
-            plan = cached_plan(key, lambda: calibrate_capped_front(
-                front,
-                max_posting_size,
-                "containment_postings",
-                pair_budget=pair_budget,
-                escape_arg="max_posting_size",
-            ))
+        plan = preflight(
+            {"containment_postings": lambda: sets.select(
+                F.explode("hs").alias("key"))},
+            max_posting_size, DEFAULT_MAX_POSTING_SIZE,
+            Budget.verified(spark, pair_budget), corpus_fingerprint(sf_dir),
+            escape_arg="max_posting_size",
+        )
         return containment_pairs_capped(
             docs, max_posting_size=plan.max_bucket_size,
             observation=observation, sets=sets,
