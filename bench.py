@@ -134,6 +134,11 @@ HEADLINE = [
     "q_hard_negatives",
 ]
 
+#: run before any timed query: the JVM/codegen path, then the Python-worker
+#: daemon (one-time startup otherwise lands on the first applyInPandas
+#: query's number). tools/scale_probe.py warms up with the same list.
+WARMUP = ("q01_pricing_summary", "q_shard_rolling")
+
 
 def main() -> None:
     # argparse (ADVICE r14): the hand-rolled argv scan recognized --out
@@ -168,10 +173,8 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
-    # warm-up: JVM/codegen path, then the Python-worker daemon (one-time
-    # startup otherwise lands on the first applyInPandas query's number)
-    run("q01_pricing_summary")
-    run("q_shard_rolling")
+    for name in WARMUP:
+        run(name)
 
     # scale probes (e.g. 100x replication) can skip queries whose OUTPUT is
     # quadratic in the synthetic copy count (near-pair cliques) — a data

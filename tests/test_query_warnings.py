@@ -12,6 +12,7 @@ now, not just visible to callers who passed and read an Observation.
 from __future__ import annotations
 
 import time
+import warnings
 
 import pytest
 
@@ -20,8 +21,10 @@ from video_data_pipeline_spark.queries.dedup import simhash_near_pairs_capped
 from video_data_pipeline_spark.telemetry import (
     CapDivergenceWarning,
     SpillWarning,
-    cumulative_stage_metrics,
+    StageMetricsDelta,
     install_query_warnings,
+    mark,
+    since,
 )
 
 
@@ -133,8 +136,8 @@ def test_uninstalled_listener_stops_emitting(spark):
 
 
 def test_stage_metrics_degrade_instead_of_raising():
-    # ADVICE r12: a Spark minor-version change to the private stageList
-    # signature must degrade telemetry to zeros, not break the tools
+    # a Spark minor-version change to the private stageList signature must
+    # degrade telemetry to zeros, not break the tools
     class DeadSpark:
         @property
         def sparkContext(self):
@@ -142,8 +145,12 @@ def test_stage_metrics_degrade_instead_of_raising():
 
     telemetry._DEGRADED_WARNED = False
     with pytest.warns(RuntimeWarning, match="telemetry degraded"):
-        out = cumulative_stage_metrics(DeadSpark())
-    assert out == dict.fromkeys(telemetry._METRICS.values(), 0)
-    # one-time: a second call stays silent
-    assert cumulative_stage_metrics(DeadSpark()) == out
+        assert mark(DeadSpark()) is None
+    zeros = dict.fromkeys(telemetry.KEYS, 0)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # one-time: later reads stay silent
+        assert since(DeadSpark(), (0, 0)) == zeros
+        with StageMetricsDelta(DeadSpark()) as m:
+            pass
+    assert m.degraded and m.delta == zeros and m.warning is None
     telemetry._DEGRADED_WARNED = False

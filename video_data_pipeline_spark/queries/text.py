@@ -705,7 +705,7 @@ def q_special_splice(spark, sf_dir):
         "doc_id", "text"
     )
 
-    def _scan(it):
+    def _count_specials(it):
         for pdf in it:
             out_rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
@@ -726,7 +726,7 @@ def q_special_splice(spark, sf_dir):
             )
 
     return d.mapInPandas(
-        _scan,
+        _count_specials,
         schema="doc_id bigint, n_ids bigint, n_start bigint, n_patch bigint, "
         "n_end bigint, ids_sum bigint",
     )

@@ -53,7 +53,8 @@ def get_spark(
         # shingle, array intersections) is thousands of CPU cycles per
         # byte. Measured at sf0.1: the stock floor coalesced those stages
         # to 1-5 partitions, serializing multi-second compute onto one
-        # core (perf_probe: ~1.0 effective cores on a 32-core master).
+        # core (~1.0 effective cores, task-seconds / wall, on a 32-core
+        # master; tools/scale_probe.py reports the column).
         # Value chosen by two same-tree env-flip ABBA A/Bs (tools/env_ab.py,
         # OPTIMIZATION_r16.md §aqe-floor): 64k freed the compute-dense
         # families (simjoin family 0.57× vs stock) but over-split the

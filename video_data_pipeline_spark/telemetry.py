@@ -1,46 +1,53 @@
-"""Driver-side stage-metrics telemetry: spill / shuffle bytes per query.
+"""Driver-side stage metrics per unit of work: jobs, stages, tasks, task
+time, and input/shuffle/spill bytes.
 
-Motivation (r10/r11 VERDICT #5): the sfp30 probe's uncapped pair joins
-died as *disk exhaustion five minutes in* — the only observable was the OS
-filling up. The metric that names the pathology before the disk fills is
-``diskBytesSpilled`` (and its memory twin), which Spark already tracks per
-stage; this module surfaces it driver-side so ``tools/scale_probe.py`` and
-``tools/bench_e2e.py`` can record a per-query spill/shuffle budget and
-WARN while the job is still healthy.
+Disk spill names a pathological corpus (hot bucket, skewed key) before
+the spill disk fills, so ``tools/scale_probe.py`` and
+``tools/bench_e2e.py`` record these numbers per query and WARN while the
+job is still healthy.
 
-Why not a ``SparkListener``: a Python listener needs the py4j callback
-server (an extra socket + thread, and a hard dependency on gateway
-lifecycle). The driver's ``AppStatusStore`` — the store the Spark UI reads
-— already aggregates task metrics per stage, so we read it directly
-through the existing py4j gateway: zero setup, works on any driver
-session, and survives query failures (the partial stages are still in the
-store, so a killed probe cell still reports how much it had spilled).
+The numbers come from the driver's ``AppStatusStore`` (the store the
+Spark UI reads) through the existing py4j gateway. A Python
+``SparkListener`` would need the py4j callback server (an extra socket
+and thread); the store needs no setup and keeps a failed query's stages,
+so a killed probe cell still reports its spill.
 
-Caveats, by construction:
-- totals are CUMULATIVE across the session; use :class:`StageMetricsDelta`
-  around a unit of work for per-query numbers.
-- the store retains ``spark.ui.retainedStages`` (default 1000) stages.
-  Deltas are therefore computed BY STAGE ID (sum over stages newer than
-  the window start), not as a difference of cumulative totals — the
-  cumulative diff went to zero whenever eviction removed pre-window
-  stages during the window (observed on a long pytest session, r13). A
-  window only undercounts if >1000 stages complete INSIDE it and its own
-  early stages get evicted — far beyond any single measured query here.
+One reader serves every caller: :func:`mark` returns the newest (job id,
+stage id) and :func:`since` sums the jobs and non-``SKIPPED`` stages
+created after a mark (a SKIPPED stage is a reused shuffle that ran no
+tasks). The store lists both newest first, so a window read stops at the
+first id at or below its mark and costs the window, not the retained
+store. Attribution by id, not by differencing cumulative totals, keeps a
+window exact when the store evicts older stages during it.
+
+The reads use private py4j calls (``stageList`` has a 5-argument Scala
+signature). Any failure degrades to zeros with a one-time
+``RuntimeWarning``, and a window whose mark failed reads zeros, never the
+session's whole retained history.
 """
 
 from __future__ import annotations
 
+import math
 import threading
+import time
 import warnings
 import weakref
 
-#: AppStatusStore getter -> snake_case key in our records
-_METRICS = {
+#: status-store StageData getter -> key in a :func:`since` record
+_STAGE_COUNTERS = {
     "diskBytesSpilled": "disk_spill_bytes",
     "memoryBytesSpilled": "memory_spill_bytes",
     "shuffleWriteBytes": "shuffle_write_bytes",
     "shuffleReadBytes": "shuffle_read_bytes",
+    "inputBytes": "input_bytes",
+    "executorRunTime": "task_ms",
+    "numCompleteTasks": "tasks",
+    "numFailedTasks": "failed_tasks",
 }
+
+#: every key of a :func:`since` record
+KEYS = ("jobs", "stages", *_STAGE_COUNTERS.values())
 
 #: default WARN threshold: 8 GiB of disk spill in one query is the scale of
 #: the sfp30 pathology's opening minutes, far above every healthy query's
@@ -51,81 +58,98 @@ SPILL_WARN_BYTES = 8 << 30
 _DEGRADED_WARNED = False
 
 
-def cumulative_stage_metrics(spark) -> dict[str, int]:
-    """Sum spill/shuffle byte counters over every stage the driver's
-    status store currently retains (completed, failed, and running —
-    failed stages matter: the spill that killed a cell is the datum).
-
-    The ``stageList`` call below hardcodes a PRIVATE 5-arg Scala
-    signature (py4j has no default-arg support); a Spark minor-version
-    change to it would otherwise throw inside every delta and take the
-    probe/bench tools down with the telemetry (ADVICE r12). Any py4j
-    failure therefore degrades to all-zero metrics with a ONE-TIME
-    warning — measurement must never break the measured job."""
-    return _scan_stages(spark)[0]
-
-
-def _scan_stages(
-    spark, min_stage_id: int = -1
-) -> tuple[dict[str, int], int, bool]:
-    """(metrics summed over retained stages with stageId > min_stage_id,
-    max stageId seen, scan-succeeded flag). Degrades to
-    (zeros, min_stage_id, False) with a one-time warning on any py4j
-    failure — see :func:`cumulative_stage_metrics`. The flag lets window
-    anchors distinguish "no stages yet" (-1, ok) from "scan failed" (-1,
-    degraded): summing a later window from a FAILED anchor would count the
-    session's entire retained history — an overcount the never-overcount
-    contract forbids (ADVICE r13)."""
+def _degrade(e: Exception) -> None:
     global _DEGRADED_WARNED
-    out = dict.fromkeys(_METRICS.values(), 0)
-    max_id = min_stage_id
-    try:
-        sc = spark.sparkContext
-        jvm, gw = sc._jvm, sc._gateway
-        store = sc._jsc.sc().statusStore()
-        # full Scala signature (no py4j default-arg support):
-        # stageList(statuses, details, withSummaries, unsortedQuantiles, taskStatus)
-        stages = store.stageList(
-            jvm.java.util.ArrayList(),
-            False,
-            False,
-            gw.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
+    if not _DEGRADED_WARNED:
+        _DEGRADED_WARNED = True
+        warnings.warn(
+            "stage-metrics telemetry degraded to zeros (AppStatusStore "
+            f"read failed: {e!r}) — spill/shuffle numbers will be "
+            "missing, the measured job is unaffected",
+            RuntimeWarning,
+            stacklevel=3,
         )
-        it = stages.iterator()
-        while it.hasNext():
-            s = it.next()
+
+
+def _newest_first(spark):
+    """(jobs, stages) iterators over the driver's status store, each
+    ordered by descending id."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    store = sc._jsc.sc().statusStore()
+    # the full Scala signature, as py4j has no default arguments:
+    # statuses, details, withSummaries, unsortedQuantiles, taskStatus
+    stages = store.stageList(
+        jvm.java.util.ArrayList(),
+        False,
+        False,
+        sc._gateway.new_array(jvm.double, 0),
+        jvm.java.util.ArrayList(),
+    )
+    jobs = store.jobsList(jvm.java.util.ArrayList())
+    return jobs.iterator(), stages.iterator()
+
+
+def mark(spark) -> tuple[int, int] | None:
+    """The newest (job id, stage id) in the status store, -1 for none
+    yet; ``None`` when the read failed."""
+    try:
+        jobs, stages = _newest_first(spark)
+        return (
+            int(jobs.next().jobId()) if jobs.hasNext() else -1,
+            int(stages.next().stageId()) if stages.hasNext() else -1,
+        )
+    except Exception as e:  # noqa: BLE001 — Spark API drift / dead session
+        _degrade(e)
+        return None
+
+
+def since(
+    spark, start: tuple[int, int] | None, end: tuple[int, int] | None = None
+) -> dict[str, int]:
+    """Sum the jobs and non-``SKIPPED`` stages created after the mark
+    ``start`` and, when ``end`` is given, not after the mark ``end``.
+    All :data:`KEYS`, zero when ``start`` is ``None`` (a failed mark) or
+    the read fails."""
+    out = dict.fromkeys(KEYS, 0)
+    if start is None:
+        return out
+    (job_lo, stage_lo), (job_hi, stage_hi) = start, end or (math.inf, math.inf)
+    try:
+        jobs, stages = _newest_first(spark)
+        while jobs.hasNext():
+            jid = int(jobs.next().jobId())
+            if jid <= job_lo:
+                break
+            out["jobs"] += jid <= job_hi
+        while stages.hasNext():
+            s = stages.next()
             sid = int(s.stageId())
-            if sid > max_id:
-                max_id = sid
-            if sid <= min_stage_id:
+            if sid <= stage_lo:
+                break
+            if sid > stage_hi or str(s.status().toString()) == "SKIPPED":
                 continue
-            for getter, key in _METRICS.items():
+            out["stages"] += 1
+            for getter, key in _STAGE_COUNTERS.items():
                 out[key] += int(getattr(s, getter)())
     except Exception as e:  # noqa: BLE001 — Spark API drift / dead session
-        if not _DEGRADED_WARNED:
-            _DEGRADED_WARNED = True
-            warnings.warn(
-                "stage-metrics telemetry degraded to zeros (AppStatusStore "
-                f"read failed: {e!r}) — spill/shuffle numbers will be "
-                "missing, the measured job is unaffected",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        return dict.fromkeys(_METRICS.values(), 0), min_stage_id, False
-    return out, max_id, True
+        _degrade(e)
+        return dict.fromkeys(KEYS, 0)
+    return out
 
 
 class StageMetricsDelta:
-    """Context manager: per-unit-of-work spill/shuffle bytes.
+    """Context manager: one unit of work's :func:`since` window and wall
+    time.
 
     >>> with StageMetricsDelta(spark) as m:
     ...     df.write.format("noop").mode("overwrite").save()
-    >>> m.delta  # {'disk_spill_bytes': 0, 'shuffle_write_bytes': 1234, ...}
-    >>> m.warning  # None, or a human-readable spill warning string
+    >>> m.secs, m.delta["jobs"], m.warning  # warning: None or a spill message
 
-    ``delta``/``warning`` are also populated when the body RAISES — the
-    spill of a dying query is exactly the number the probe wants."""
+    The clock runs only inside the window, so no status-store read is
+    timed. Every field lands when the body RAISES too — a dying query's
+    spill is the datum the probe wants. ``degraded``: the mark failed, so
+    the window reads zeros and never warns."""
 
     def __init__(self, spark, warn_bytes: int = SPILL_WARN_BYTES):
         self._spark = spark
@@ -133,32 +157,20 @@ class StageMetricsDelta:
         self.delta: dict[str, int] = {}
         self.warning: str | None = None
         self.degraded = False
+        self.secs = 0.0
 
     def __enter__(self) -> "StageMetricsDelta":
-        # record the newest stage id, NOT a cumulative snapshot: summing
-        # only stages newer than this is immune to the store evicting
-        # pre-window stages mid-window (which zeroed cumulative diffs on
-        # long sessions — r13 fix)
-        _, self._since, ok = _scan_stages(self._spark)
-        # a FAILED enter scan anchors at -1, which a succeeding exit scan
-        # would read as "sum every retained stage" — an overcount. Report
-        # zeros for the window instead (ADVICE r13): telemetry degrades,
-        # never overstates.
-        self.degraded = not ok
+        self._mark = mark(self._spark)
+        self.degraded = self._mark is None
+        self._t0 = time.perf_counter()
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
+        self.secs = time.perf_counter() - self._t0
+        self.delta = since(self._spark, self._mark)
         if self.degraded:
-            self.delta = dict.fromkeys(_METRICS.values(), 0)
             return
-        try:
-            after, _, _ = _scan_stages(self._spark, self._since)
-        except Exception:  # noqa: BLE001 — a dead session shouldn't mask exc
-            return
-        self.delta = {k: max(0, v) for k, v in after.items()}
-        spilled = self.delta.get("disk_spill_bytes", 0) + self.delta.get(
-            "memory_spill_bytes", 0
-        )
+        spilled = self.delta["disk_spill_bytes"] + self.delta["memory_spill_bytes"]
         if spilled > self._warn_bytes:
             self.warning = (
                 f"SPILL WARNING: {self.delta['disk_spill_bytes'] >> 20} MiB disk "
@@ -184,11 +196,12 @@ class StageMetricsDelta:
 #   longer be mistaken for oracle-exact.
 # - spill: per-query stage-metric deltas against the 8 GiB threshold —
 #   the same early warning the probes get, without the manual wrapper.
-#   (Under concurrent actions the delta attribution is approximate: the
-#   counters are session-cumulative, so a warning names the query that
-#   OBSERVED the spill crossing, which on a busy session may include a
-#   concurrent query's bytes. The binary signal — "this session is
-#   spilling past the pathology threshold" — is exact.)
+#   (Under concurrent actions the attribution is approximate: a window
+#   holds every stage created since the previous query finished, so a
+#   warning names the query that OBSERVED the spill crossing, which on a
+#   busy session may include a concurrent query's stages. The binary
+#   signal — "this session is spilling past the pathology threshold" —
+#   is exact.)
 
 
 class CapDivergenceWarning(UserWarning):
@@ -230,7 +243,7 @@ class _QueryWarningListener:
         self._spill_warn_bytes = spill_warn_bytes
         self._emit = emit
         self._lock = threading.Lock()
-        _, self._since, self._since_ok = _scan_stages(spark)
+        self._mark = mark(spark)
         # py4j wraps the Python object in a NEW Java proxy per call, so
         # listenerManager().unregister(self) never matches the proxy that
         # register() created (identity equals) — the JVM-side registration
@@ -310,17 +323,14 @@ class _QueryWarningListener:
         if spark is None:  # session collected; nothing to measure
             return
         with self._lock:
-            since, since_ok = self._since, self._since_ok
-            delta, new_since, ok = _scan_stages(spark, since)
-            self._since, self._since_ok = new_since, ok
-            if not since_ok:
-                # the PREVIOUS anchor scan failed, so this window spans
-                # the session's whole retained history — an overcount.
-                # Re-anchor (done above) and skip the check (ADVICE r13).
+            start, self._mark = self._mark, mark(spark)
+            if start is None:
+                # the PREVIOUS mark failed, so this window would span the
+                # session's whole retained history — an overcount.
+                # Re-anchor (done above) and skip the check.
                 return
-        spilled = delta.get("disk_spill_bytes", 0) + delta.get(
-            "memory_spill_bytes", 0
-        )
+            delta = since(spark, start, self._mark)
+        spilled = delta["disk_spill_bytes"] + delta["memory_spill_bytes"]
         if spilled > self._spill_warn_bytes:
             self._emit(
                 f"SPILL WARNING [{func_name}]: {spilled >> 20} MiB spilled "
